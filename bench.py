@@ -136,7 +136,7 @@ def prepare_tokens(spark, sf_dir: str, replicate: int = 1) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from mysql_log_parser_spark import entry_queries as EQ
     from mysql_log_parser_spark.functions.fingerprint import with_fingerprint

@@ -9,6 +9,12 @@ Reads the tokens table, runs parse -> fingerprint -> enrich-ready events,
 writes per-source routed events plus class/global digests, optionally prints
 the text report.  All progress is chunk-resumable when --incremental is given
 (input treated as a directory of chunk files; manifest under --output).
+
+Both digests come from ONE pass over the events, like the reference CLI's
+single accumulator loop (bin/parser-cli.go:76-101): rollup_digest computes
+the class rows and the global row in one aggregation, that class-sized
+result is materialized once, and class_digest/ and global_digest/ are
+projected from it.  The events are scanned and parsed once per run.
 """
 
 from __future__ import annotations
@@ -39,7 +45,8 @@ def main(argv: list[str] | None = None) -> None:
         "--bench-json",
         action="store_true",
         help="print ONE JSON line {events, elapsed_sec, events_per_sec}: "
-        "the flagship digest span timed inside the job after one warmup "
+        "the digest span (the one class+global aggregation and both digest "
+        "writes) timed inside the job after one untimed warmup "
         "materialization (bench.py's warm protocol; JVM/session startup and "
         "per-worker warmup excluded) — bench_submit.py reads this",
     )
@@ -53,7 +60,10 @@ def main(argv: list[str] | None = None) -> None:
 
     from pyspark.sql import SparkSession
 
-    from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
+    from mysql_log_parser_spark.operators.aggregate import (
+        rollup_digest,
+        split_rollup_digest,
+    )
     from mysql_log_parser_spark.operators.checkpoint import CheckpointedRunner
     from mysql_log_parser_spark.pipeline import SlowLogPipeline
     from mysql_log_parser_spark.session import build_session
@@ -109,29 +119,28 @@ def main(argv: list[str] | None = None) -> None:
             pipe.route(ev, f"{args.output}/routed")
             ev = spark.read.parquet(f"{args.output}/routed")
 
-    # metrics ride the digest write itself (observe = map-side counters on
-    # the existing action; no extra pass) — the north rule's "metrics
-    # emitted" for plain batch runs; incremental runs get theirs from the
-    # checkpoint manifest
+    # metrics ride the digest aggregation itself (observe = map-side
+    # counters on the existing action; no extra pass) — the north rule's
+    # "metrics emitted" for plain batch runs; incremental runs get theirs
+    # from the checkpoint manifest
     from mysql_log_parser_spark.operators.metrics import observe_events
 
     ev, obs = observe_events(ev)
-    cd = class_digest(ev, mode=args.mode)
-    bench_sec = None
+    rollup = rollup_digest(ev, mode=args.mode)
     if args.bench_json:
         # Warm protocol, same as bench.py: one untimed materialization first
         # (per-Python-worker first-task page-fault/alloc penalty is 3-5x and
         # GROWS with worker count — measured cold, a 32-core run is slower
-        # than an 8-core one), then time the flagship digest span alone.
-        cd.write.format("noop").mode("overwrite").save()
-        t1 = time.perf_counter()
-        cd.write.mode("overwrite").parquet(f"{args.output}/class_digest")
-        bench_sec = time.perf_counter() - t1
-    else:
-        cd.write.mode("overwrite").parquet(f"{args.output}/class_digest")
-    global_digest(ev, mode=args.mode).write.mode("overwrite").parquet(
-        f"{args.output}/global_digest"
-    )
+        # than an 8-core one), then time the digest span alone.
+        rollup.write.format("noop").mode("overwrite").save()
+    t1 = time.perf_counter()
+    # the one pass over the events: the eager localCheckpoint runs the
+    # aggregation now and keeps its class-sized result (one partition, so
+    # the class digest stays one file); both digests are projected from it
+    cd, gd = split_rollup_digest(rollup.localCheckpoint())
+    cd.write.mode("overwrite").parquet(f"{args.output}/class_digest")
+    gd.write.mode("overwrite").parquet(f"{args.output}/global_digest")
+    bench_sec = time.perf_counter() - t1
     elapsed = time.perf_counter() - t0
 
     if args.bench_json:
@@ -153,7 +162,7 @@ def main(argv: list[str] | None = None) -> None:
                     "events_per_sec": round(total / bench_sec, 1),
                     "master": spark.sparkContext.master,
                     "parallelism": spark.sparkContext.defaultParallelism,
-                    # observed during the digest write (no extra pass)
+                    # observed during the digest aggregation (no extra pass)
                     "observed": {k: v for k, v in obs.get.items()},
                 }
             )

@@ -29,7 +29,7 @@ Two modes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 GK_ACCURACY = 100  # == 1/eps for the reference's gkquantile.NewGKSummary(0.01)
@@ -114,11 +114,78 @@ def stats_long(events: DataFrame, group_cols: tuple[str, ...] = (), mode: str = 
     )
 
 
-def _promoted_stats(col: str, mode: str, integer: bool, prefix: str) -> list[Column]:
-    v = F.col(col)
+# promoted metric columns (see promote_metrics) -> integer stats: number
+# metrics are integers, time metrics float32 accumulated as float64
+_METRICS = {
+    "query_time": False,
+    "lock_time": False,
+    "rows_sent": True,
+    "rows_examined": True,
+}
+_GLOBAL_METRICS = ("query_time", "rows_sent")  # GlobalClass tracks only these
+
+
+def _stat_names(metric: str) -> list[str]:
+    return [f"{metric}_{n}" for n in _STAT_NAMES]
+
+
+def _stats(metric: str, mode: str) -> dict[str, Column]:
+    """{<metric>_<stat>: aggregate} for one promoted metric column."""
+    return dict(zip(_stat_names(metric), _metric_stats(F.col(metric), mode, _METRICS[metric])))
+
+
+def _total() -> dict[str, Column]:
+    return {"total_queries": F.count(F.lit(1))}
+
+
+def _class_aggs(mode: str, with_example: bool = True) -> dict[str, Column]:
+    """QueryClass aggregates (class.go:70-121), keyed by output column."""
+    aggs = {"fingerprint": F.first("fingerprint"), **_total()}
+    for m in _METRICS:
+        aggs |= _stats(m, mode)
+    if with_example:
+        ex = F.max_by(F.struct("query", "ts"), F.col("query_time"))
+        aggs |= {
+            "example_query_time": F.max("query_time"),
+            "example_query": ex["query"],
+            # Go reformats the ts or blanks it on parse failure (class.go:106-110)
+            "example_ts": F.coalesce(
+                F.date_format(
+                    F.try_to_timestamp(ex["ts"], F.lit("yyMMdd H:mm:ss")),
+                    "yyyy-MM-dd HH:mm:ss",
+                ),
+                F.lit(""),
+            ),
+        }
+    return aggs
+
+
+def _rate_aggs() -> dict[str, Column]:
+    """Rate-limit state of GlobalClass (class.go:41-55).  The least and
+    greatest (rate_type, rate_limit) pair over rate-limited events differ
+    exactly when more than one distinct pair was seen, so the consistency
+    flag needs no distinct aggregate (see _global_columns)."""
+    rate = F.when(F.col("rate_type") != "", F.struct("rate_type", "rate_limit"))
+    return {
+        "_rate_lo": F.min(rate),
+        "_rate_hi": F.max(rate),
+        "rate_type": F.max_by("rate_type", F.col("rate_type") != ""),
+    }
+
+
+def _aliased(aggs: dict[str, Column]) -> list[Column]:
+    return [c.alias(n) for n, c in aggs.items()]
+
+
+def _global_columns() -> list[Column]:
+    """global_digest's output columns, projected from a row carrying
+    total_queries, unique_queries, the _GLOBAL_METRICS stats and _rate_aggs."""
     return [
-        c.alias(f"{prefix}_{n}")
-        for c, n in zip(_metric_stats(v, mode, integer), _STAT_NAMES)
+        F.col("total_queries"),
+        F.col("unique_queries"),
+        *[F.col(n) for m in _GLOBAL_METRICS for n in _stat_names(m)],
+        (~F.col("_rate_lo").eqNullSafe(F.col("_rate_hi"))).alias("mixed_rate_limits"),
+        F.col("rate_type"),
     ]
 
 
@@ -138,50 +205,17 @@ def class_digest(
     stats and the argmax example (class.go:100-116).
     """
     keys = [*group_extra, "class_id"]
-    aggs = [
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-        *_promoted_stats("query_time", mode, False, "query_time"),
-        *_promoted_stats("lock_time", mode, False, "lock_time"),
-        *_promoted_stats("rows_sent", mode, True, "rows_sent"),
-        *_promoted_stats("rows_examined", mode, True, "rows_examined"),
-    ]
-    if with_example:
-        ex = F.max_by(F.struct("query", "ts"), F.col("query_time"))
-        aggs += [
-            F.max("query_time").alias("example_query_time"),
-            ex["query"].alias("example_query"),
-            # Go reformats the ts or blanks it on parse failure (class.go:106-110)
-            F.coalesce(
-                F.date_format(
-                    F.try_to_timestamp(ex["ts"], F.lit("yyMMdd H:mm:ss")),
-                    "yyyy-MM-dd HH:mm:ss",
-                ),
-                F.lit(""),
-            ).alias("example_ts"),
-        ]
-    return events.groupBy(*keys).agg(*aggs)
+    return events.groupBy(*keys).agg(*_aliased(_class_aggs(mode, with_example)))
 
 
 def global_digest(events: DataFrame, mode: str = "sketch") -> DataFrame:
     """GlobalClass (class.go:12-64, bin/parser-cli.go:92-101): one row with
     TotalQueries, UniqueQueries (#classes), rate-limit consistency flag, and
     the same promoted metric stats over all events."""
-    rate = F.when(F.col("rate_type") != "", F.struct("rate_type", "rate_limit"))
-    return events.agg(
-        F.count(F.lit(1)).alias("total_queries"),
-        F.countDistinct("class_id").alias("unique_queries"),
-        *_promoted_stats("query_time", mode, False, "query_time"),
-        *_promoted_stats("rows_sent", mode, True, "rows_sent"),
-        (F.countDistinct(rate) > 1).alias("mixed_rate_limits"),  # class.go:41-55
-        F.max_by("rate_type", F.col("rate_type") != "").alias("rate_type"),
-    )
-
-
-def top_classes(digest: DataFrame, total_queries: int) -> DataFrame:
-    """Report filter: classes with more than 10% of total traffic
-    (bin/parser-cli.go:139)."""
-    return digest.where(F.col("total_queries") > F.lit(total_queries) / 10)
+    aggs = {**_total(), "unique_queries": F.countDistinct("class_id")}
+    for m in _GLOBAL_METRICS:
+        aggs |= _stats(m, mode)
+    return events.agg(*_aliased(aggs | _rate_aggs())).select(*_global_columns())
 
 
 def histogram(events: DataFrame, col: str = "query_time", buckets: int = 20) -> DataFrame:
@@ -295,16 +329,34 @@ def rollup_digest(events: DataFrame, mode: str = "sketch") -> DataFrame:
     inside the same shuffle, so the reference's two separate accumulator
     passes (QueryClass map + GlobalClass, bin/parser-cli.go:76-101) collapse
     into a single job: ONE scan/parse of the events, both result levels.
-    (countDistinct adds one extra keyed exchange, but over already-reduced
-    class-cardinality rows, not events.)
 
-    The grand-total row has is_global = 1, class_id null, and
-    unique_queries = number of distinct classes (class rows carry 1).
+    Every row carries the class_digest aggregates plus the global rate-limit
+    state; class rows have is_global = 0, the grand-total row has
+    is_global = 1 and class_id null.  There is no distinct aggregate (it
+    would make Spark expand every event row once more): unique_queries is 1
+    on class rows and, on the global row, the number of class rows — a
+    window over the class-cardinality result (one partition), not over
+    events.  split_rollup_digest projects class_digest and global_digest
+    from it.  An event-free input has no grand-total row here, unlike
+    global_digest's one row of zero counts.
     """
-    return events.rollup("class_id").agg(
-        F.count(F.lit(1)).alias("total_queries"),
-        F.countDistinct("class_id").alias("unique_queries"),
-        *_promoted_stats("query_time", mode, False, "query_time"),
-        *_promoted_stats("rows_examined", mode, True, "rows_examined"),
-        F.grouping("class_id").cast("long").alias("is_global"),
+    aggs = _class_aggs(mode) | _rate_aggs()
+    r = events.rollup("class_id").agg(
+        *_aliased(aggs), F.grouping("class_id").cast("long").alias("is_global")
     )
+    is_global = F.col("is_global") == 1
+    n_classes = F.count_if(~is_global).over(Window.partitionBy())
+    return r.withColumn(
+        "unique_queries", F.when(is_global, n_classes).otherwise(F.lit(1).cast("long"))
+    )
+
+
+def split_rollup_digest(rollup: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(class_digest, global_digest) of a rollup_digest frame, each with
+    exactly the columns of the function of that name.  Both are plain
+    filters and projections: materialize `rollup` first (e.g. with
+    localCheckpoint) and writing both reads the events once."""
+    is_global = F.col("is_global") == 1
+    # the output names of _class_aggs do not depend on the mode
+    classes = rollup.where(~is_global).select("class_id", *_class_aggs("exact"))
+    return classes, rollup.where(is_global).select(*_global_columns())

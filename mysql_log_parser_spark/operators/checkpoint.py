@@ -25,6 +25,7 @@ import json
 import os
 import time
 import uuid
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,18 +100,16 @@ class CheckpointedRunner:
             ev.write.mode("overwrite").parquet(out_path)
 
             # per-partition lineage: row counts per routed source AND per
-            # written output file, from one cheap read-back of this chunk
-            done = self.spark.read.parquet(out_path)
-            by_source = {
-                r["source"]: r["cnt"]
-                for r in done.groupBy("source").agg(F.count("*").alias("cnt")).collect()
-            }
-            by_file = {
-                os.path.basename(r["f"]): r["cnt"]
-                for r in done.groupBy(F.input_file_name().alias("f"))
+            # written output file, from one grouped read-back of this chunk
+            by_source, by_file = Counter(), Counter()
+            for r in (
+                self.spark.read.parquet(out_path)
+                .groupBy("source", F.input_file_name().alias("f"))
                 .agg(F.count("*").alias("cnt"))
                 .collect()
-            }
+            ):
+                by_source[r["source"]] += r["cnt"]
+                by_file[os.path.basename(r["f"])] += r["cnt"]
             rec = {
                 "chunk": chunk,
                 "rows_in": int(in_obs.get["rows_in"]),

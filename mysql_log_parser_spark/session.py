@@ -49,11 +49,12 @@ def build_session(
     # PYSPARK_GATEWAY_PORT to the user script); setting .master() here would
     # silently override the cluster the operator asked for.  Inherit it.
     under_submit = master is None and "PYSPARK_GATEWAY_PORT" in os.environ
+    usable = str(len(os.sched_getaffinity(0)))  # cores this process may run on
     if master is None and not under_submit:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", usable)
         master = f"local[{cpus}]"
     if shuffle_partitions is None and not under_submit:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else usable
         shuffle_partitions = 64 if n == "*" else max(8, 2 * int(n))
 
     b = SparkSession.builder.appName(app_name)

@@ -9,7 +9,11 @@ from pyspark.sql import functions as F
 
 from mysql_log_parser_spark import synth
 from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-from mysql_log_parser_spark.operators.aggregate import class_digest
+from mysql_log_parser_spark.operators.aggregate import (
+    class_digest,
+    rollup_digest,
+    split_rollup_digest,
+)
 from mysql_log_parser_spark.operators.enrich import build_dims, enrich_events
 from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
 from mysql_log_parser_spark.sources.tokens_table import TokensTable
@@ -73,6 +77,16 @@ def test_class_agg_is_partial_final(spark, tokens_dir):
     # partial (map-side) aggregation must appear before the exchange
     assert plan.count("HashAggregate") >= 2
     assert "Exchange" in plan
+
+
+def test_digest_job_parses_once(spark, tokens_dir):
+    """digest_job's shape: the class+global rollup holds the only parse, and
+    the two digests projected from its materialized result re-run none."""
+    ev = promote_metrics(with_fingerprint(parse_slowlog(spark.read.parquet(tokens_dir))))
+    rollup = rollup_digest(ev, mode="sketch")
+    assert _plan(rollup).count("MapInArrow") == 1
+    for out in split_rollup_digest(rollup.localCheckpoint()):
+        assert "MapInArrow" not in _plan(out)
 
 
 def _docs_df(spark):
