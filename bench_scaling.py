@@ -1,18 +1,18 @@
 """Scaling-efficiency protocol (BASELINE.json north_rule).
 
 No real cluster exists in this sandbox, so N vs 4N executors is evidenced by
-running the IDENTICAL job on the IDENTICAL prepared input at three
+running the IDENTICAL job on the IDENTICAL prepared input at two
 parallelism levels (separate JVMs), reporting throughput at each and
 
     efficiency(N -> 4N) = (events_per_sec@4N / events_per_sec@N) / 4
 
-Two pairs are reported: 2 -> 8 cores (compute-bound regime) and 8 -> 32
-cores.  NB on this single box the 8 -> 32 pair saturates MEMORY BANDWIDTH,
-not the engine: a pure-multiprocessing run of the same parse kernel (no
-Spark) scales 8 -> 32 at only ~0.54 efficiency on this hardware, so the
-Spark pipeline's 8 -> 32 number is hardware-bound; on a real multi-node
-cluster each executor brings its own memory channels.  Target >= 0.8 on the
-compute-bound pair.  Results go to BENCH/BASELINE.md.  Usage:
+The pair is derived from the usable core count C (the process's CPU
+affinity): N = max(1, C // 4), so 1 -> 4 on a 4-core box and 8 -> 32 on a
+32-core one.  On a single box the larger leg can saturate MEMORY BANDWIDTH
+rather than the engine (a 32-core box measured a pure-multiprocessing run
+of the same parse kernel at only ~0.54 efficiency 8 -> 32), so compare
+against the control kernel's own scaling before blaming Spark.  Target
+>= 0.8 on a compute-bound pair.  Results go to BENCH/BASELINE.md.  Usage:
 
     python bench_scaling.py [sf_dir] [replicate]
 """
@@ -51,24 +51,22 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     replicate = int(sys.argv[2]) if len(sys.argv) > 2 else 30
 
-    legs = {c: run(c, sf_dir, replicate) for c in (2, 8, 32)}
+    n = max(1, len(os.sched_getaffinity(0)) // 4)
+    legs = {c: run(c, sf_dir, replicate) for c in (n, 4 * n)}
     r = {c: legs[c]["events_per_sec"] for c in legs}
     print(
         json.dumps(
             {
                 "metric": "scaling_efficiency",
-                "value": round((r[8] / r[2]) / 4, 3),
+                "value": round((r[4 * n] / r[n]) / 4, 3),
                 "unit": "ratio",
-                "pair": "2->8 cores (compute-bound; N vs 4N)",
-                "efficiency_8_to_32": round((r[32] / r[8]) / 4, 3),
-                "note_8_to_32": "memory-bandwidth-bound on this single box; "
-                "raw multiprocessing of the same kernel scales 8->32 at ~0.54",
-                "events": legs[32]["events"],
+                "pair": f"{n}->{4 * n} cores (N vs 4N)",
+                "events": legs[4 * n]["events"],
                 "events_per_sec": {str(c): r[c] for c in legs},
                 "pipeline_sec": {str(c): legs[c]["value"] for c in legs},
                 # pinned no-Spark control per leg (bench.py control kernel):
                 # divides out box drift round-over-round, and its own
-                # 8->32 degradation IS the measured bandwidth ceiling
+                # N->4N degradation IS the measured bandwidth ceiling
                 "control_sec": {str(c): legs[c].get("control_sec") for c in legs},
                 "flagship_over_control": {
                     str(c): legs[c].get("flagship_over_control") for c in legs

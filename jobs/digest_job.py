@@ -14,7 +14,8 @@ Both digests come from ONE pass over the events, like the reference CLI's
 single accumulator loop (bin/parser-cli.go:76-101): rollup_digest computes
 the class rows and the global row in one aggregation, that class-sized
 result is materialized once, and class_digest/ and global_digest/ are
-projected from it.  The events are scanned and parsed once per run.
+projected from it.  The events are scanned and parsed once per run.  An
+event-free input still gets a one-row global_digest/ of zero counts.
 """
 
 from __future__ import annotations
@@ -58,9 +59,11 @@ def main(argv: list[str] | None = None) -> None:
             "single raw file re-run --raw-log (byte ranges are recomputed)"
         )
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
     from mysql_log_parser_spark.operators.aggregate import (
+        global_digest,
         rollup_digest,
         split_rollup_digest,
     )
@@ -137,7 +140,20 @@ def main(argv: list[str] | None = None) -> None:
     # the one pass over the events: the eager localCheckpoint runs the
     # aggregation now and keeps its class-sized result (one partition, so
     # the class digest stays one file); both digests are projected from it
-    cd, gd = split_rollup_digest(rollup.localCheckpoint())
+    totals = Observation("mlp_rollup_totals")
+    cd, gd = split_rollup_digest(
+        rollup.observe(
+            totals, F.count_if(F.col("is_global") == 1).alias("global_rows")
+        ).localCheckpoint()
+    )
+    if totals.get["global_rows"] == 0:
+        # an event-free input leaves the rollup without its grand-total
+        # row: write global_digest's one row of zero counts instead (sketch
+        # form in both modes; exact percentiles of nothing cannot be
+        # indexed).  The observation rides the localCheckpoint above and
+        # limit(0) plans no scan, so this adds no job.  `obs` cannot tell:
+        # on an empty input adaptive execution drops the stage carrying it.
+        gd = global_digest(ev.limit(0), mode="sketch")
     cd.write.mode("overwrite").parquet(f"{args.output}/class_digest")
     gd.write.mode("overwrite").parquet(f"{args.output}/global_digest")
     bench_sec = time.perf_counter() - t1

@@ -7,16 +7,23 @@ the seek point is discarded.  At table scale the equivalent unit of progress
 is an input *chunk* (a parquet file of the tokens table, or an Iceberg
 snapshot id): the runner processes only chunks not yet committed to its
 manifest, writes each chunk's output idempotently, and commits the manifest
-entry last — so a crash anywhere re-processes at most the in-flight chunk
+entry last — so a crash anywhere re-processes at most the in-flight chunks
 (exactly the reference's partial-event-discard semantics, one level up).
+
+Pending chunks run side by side, at most defaultParallelism at a time (the
+reference CLI's worker pool, bin/parser-cli.go:53-56): a chunk is a
+one-task write plus a one-task read-back, so run one after another they
+leave all cores but one idle.  A crash therefore re-processes at most
+defaultParallelism chunks, and manifest entries commit in completion
+order, not in chunk-name order.
 
 Intra-doc byte-offset resume is ALSO supported end-to-end via the parser's
 `start_offset` column (tested against the reference's StartOffset goldens);
 this module handles the chunk level above it.
 
-Manifest: a JSON-lines file under <output>/_manifest/ — one record per
-committed chunk with row counts, per-source routed counts (lineage), and
-wall-time metrics.  Commit is atomic via write-temp + rename.
+Manifest: one JSON file per committed chunk under <output>/_manifest/, with
+row counts, per-source routed counts (lineage), and wall-time metrics.
+Commit is atomic via write-temp + rename.
 """
 
 from __future__ import annotations
@@ -27,9 +34,11 @@ import time
 import uuid
 from collections import Counter
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 class CheckpointedRunner:
@@ -76,53 +85,78 @@ class CheckpointedRunner:
     ) -> list[dict]:
         """Process uncommitted chunks of `input_dir` through `process`
         (docs df -> events df), appending each chunk's output under
-        <output>/data/chunk=<name>/ and committing lineage last.
+        <output>/data/chunk=<name>/ and committing its lineage last.
 
-        Returns the manifest records written this run.
+        Up to defaultParallelism chunks run at once, one driver thread
+        each; Spark's FIFO scheduler serves the earliest-submitted job's
+        tasks first, so extra threads only fill otherwise idle cores.  The
+        caller's job group and local properties carry over to the threads.
+        Each chunk commits as soon as it finishes, so manifest files appear
+        in completion order and a crash re-processes at most the chunks
+        still in flight.  `wall_sec` includes any time a chunk's jobs
+        waited for a core.  If a chunk fails, the other chunks still run and
+        commit, then the first failure in pending order is raised.
+
+        Returns the manifest records written this run, in pending order.
         """
-        from pyspark.sql import Observation
+        pending = self.pending_chunks(input_dir)[: max_chunks or None]
+        if not pending:
+            return []
+        width = min(len(pending), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            # wrapped here, in the caller's thread, once per chunk: the
+            # wrapper copies the caller's local properties when it is made
+            # and installs that copy in the worker thread, so each chunk
+            # needs its own (Spark SQL keeps its execution id in them)
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(self.spark)(self._run_chunk),
+                    input_dir, chunk, process,
+                )
+                for chunk in pending
+            ]
+            return [f.result() for f in futures]
 
-        records = []
-        for chunk in self.pending_chunks(input_dir)[: max_chunks or None]:
-            t0 = time.perf_counter()
-            docs = self.spark.read.parquet(os.path.join(input_dir, chunk))
-            # metrics ride along with the write action (df.observe) — no
-            # extra count jobs over the input or the pipeline
-            in_obs = Observation(f"in_{chunk}")
-            out_obs = Observation(f"out_{chunk}")
-            docs = docs.observe(in_obs, F.count(F.lit(1)).alias("rows_in"))
-            ev = process(docs).observe(
-                out_obs, F.count(F.lit(1)).alias("events_out")
-            )
-            out_path = os.path.join(self.output_dir, "data", f"chunk={chunk}")
-            # idempotent per-chunk write: a re-run of an uncommitted chunk
-            # overwrites its own partial output
-            ev.write.mode("overwrite").parquet(out_path)
+    def _run_chunk(
+        self, input_dir: str, chunk: str, process: Callable[[DataFrame], DataFrame]
+    ) -> dict:
+        """Write one chunk's events, read its lineage back, commit it."""
+        t0 = time.perf_counter()
+        docs = self.spark.read.parquet(os.path.join(input_dir, chunk))
+        # metrics ride along with the write action (df.observe) — no
+        # extra count jobs over the input or the pipeline
+        in_obs = Observation(f"in_{chunk}")
+        out_obs = Observation(f"out_{chunk}")
+        docs = docs.observe(in_obs, F.count(F.lit(1)).alias("rows_in"))
+        ev = process(docs).observe(out_obs, F.count(F.lit(1)).alias("events_out"))
+        out_path = os.path.join(self.output_dir, "data", f"chunk={chunk}")
+        # idempotent per-chunk write: a re-run of an uncommitted chunk
+        # overwrites its own partial output
+        ev.write.mode("overwrite").parquet(out_path)
 
-            # per-partition lineage: row counts per routed source AND per
-            # written output file, from one grouped read-back of this chunk
-            by_source, by_file = Counter(), Counter()
-            for r in (
-                self.spark.read.parquet(out_path)
-                .groupBy("source", F.input_file_name().alias("f"))
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            ):
-                by_source[r["source"]] += r["cnt"]
-                by_file[os.path.basename(r["f"])] += r["cnt"]
-            rec = {
-                "chunk": chunk,
-                "rows_in": int(in_obs.get["rows_in"]),
-                "events_out": int(out_obs.get["events_out"]),
-                "by_source": by_source,
-                "by_partition_file": by_file,
-                "output_partitions": len(by_file),
-                "wall_sec": round(time.perf_counter() - t0, 3),
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            self._commit(rec)
-            records.append(rec)
-        return records
+        # per-partition lineage: row counts per routed source AND per
+        # written output file, from one grouped read-back of this chunk
+        by_source, by_file = Counter(), Counter()
+        for r in (
+            self.spark.read.parquet(out_path)
+            .groupBy("source", F.input_file_name().alias("f"))
+            .agg(F.count("*").alias("cnt"))
+            .collect()
+        ):
+            by_source[r["source"]] += r["cnt"]
+            by_file[os.path.basename(r["f"])] += r["cnt"]
+        rec = {
+            "chunk": chunk,
+            "rows_in": int(in_obs.get["rows_in"]),
+            "events_out": int(out_obs.get["events_out"]),
+            "by_source": by_source,
+            "by_partition_file": by_file,
+            "output_partitions": len(by_file),
+            "wall_sec": round(time.perf_counter() - t0, 3),
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        self._commit(rec)
+        return rec
 
     def events(self) -> DataFrame:
         """All committed events (reads only committed chunk dirs)."""

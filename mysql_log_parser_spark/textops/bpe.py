@@ -27,10 +27,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+class BigramsExhausted(Exception):
+    """No sequence in the corpus has an adjacent pair left to merge.  Its
+    own type, so a trainer can stop on exhaustion without also swallowing
+    engine errors (PySparkRuntimeError is a RuntimeError)."""
+
+
 def top_bigram(tokens_df: DataFrame) -> tuple[int, int, int]:
     """Highest-frequency adjacent pair across all ``tokens`` arrays,
     ties broken by ascending (lead, next).  Returns (lead, next, count);
-    raises if no sequence has length >= 2."""
+    raises BigramsExhausted if no sequence has length >= 2."""
     pairs = tokens_df.where(F.size("tokens") >= 2).select(
         F.explode(
             F.expr(
@@ -47,7 +53,7 @@ def top_bigram(tokens_df: DataFrame) -> tuple[int, int, int]:
         .collect()
     )
     if not best:
-        raise RuntimeError("top_bigram: no sequence of length >= 2 in corpus")
+        raise BigramsExhausted("top_bigram: no sequence of length >= 2 in corpus")
     r = best[0]
     return int(r["lead"]), int(r["nxt"]), int(r["n"])
 
@@ -153,11 +159,12 @@ def bpe_train_n(
     generation is already released here.
 
     Training STOPS EARLY (len(rounds) < n_merges) when the corpus runs
-    dry of adjacent pairs — every real trainer's exhaustion rule, and the
-    case a small hash sample (bpe_train_sampled) can actually hit; a
-    raise here would throw away every merge already learned.  On any
-    other error the persisted generations are released before the
-    exception propagates (no storage leak from a mid-training failure)."""
+    dry of adjacent pairs (top_bigram raises BigramsExhausted) — every
+    real trainer's exhaustion rule, and the case a small hash sample
+    (bpe_train_sampled) can actually hit; a raise here would throw away
+    every merge already learned.  Any other error, engine errors included,
+    propagates after the persisted generations are released (no storage
+    leak from a mid-training failure)."""
     import time
 
     cur = tokens_df.select("doc_id", "tokens")
@@ -168,7 +175,7 @@ def bpe_train_n(
             t0 = time.monotonic()
             try:
                 lead, nxt, cnt = top_bigram(cur)
-            except RuntimeError:
+            except BigramsExhausted:
                 break  # no sequence with >= 2 tokens left: vocab exhausted
             cur = apply_merge(cur, (lead, nxt), first_id + i).select(
                 "doc_id", F.col("tokens_merged").alias("tokens")

@@ -389,8 +389,11 @@ def incremental_lsh_ingest(
     n_cands, is_dup, best_jaccard, best_match), schema shared with
     `lsh_verdicts`."""
     spark = base_docs.sparkSession
-    base_sigs = shingle_minhash(base_docs, text_col, id_col, n, num_hashes)
+    # write_lsh_index reads its input twice (bands, then sigs): persist so
+    # the seed minhash pass runs once, like delta_sigs below
+    base_sigs = shingle_minhash(base_docs, text_col, id_col, n, num_hashes).persist()
     write_lsh_index(base_sigs, index_dir, "overwrite", id_col, num_hashes, bands)
+    base_sigs.unpersist()
     out: DataFrame | None = None
     for i, batch in enumerate(batches):
         delta_sigs = shingle_minhash(

@@ -2,6 +2,7 @@
 intra-doc byte-offset resume contract (Options.StartOffset equivalent)."""
 
 import os
+import threading
 
 import pytest
 
@@ -87,6 +88,71 @@ def test_late_arriving_chunk(spark, chunked_input, tmp_path):
     recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, pipe.events)
     assert [r["chunk"] for r in recs] == ["chunk9.parquet"]
     assert runner.events().count() == 5 * 6 * 10
+
+
+class _ChunkFailure(Exception):
+    pass
+
+
+def test_failed_chunk_propagates_others_commit(spark, chunked_input, tmp_path):
+    """One chunk's failure is raised from run_incremental, the chunks run
+    beside it still commit valid records, and a restart processes only
+    the failed chunk."""
+    out = str(tmp_path / "out")
+    pipe = SlowLogPipeline(spark)
+
+    def fail_chunk2(docs):
+        if any(f.endswith("chunk2.parquet") for f in docs.inputFiles()):
+            raise _ChunkFailure("chunk2")
+        return pipe.events(docs)
+
+    runner = CheckpointedRunner(spark, out)
+    with pytest.raises(_ChunkFailure):
+        runner.run_incremental(chunked_input, fail_chunk2)
+    done = runner.committed_chunks()
+    assert sorted(done) == ["chunk0.parquet", "chunk1.parquet", "chunk3.parquet"]
+    for rec in done.values():
+        assert rec["rows_in"] == 6 and rec["events_out"] == 60
+        assert sum(rec["by_source"].values()) == 60
+        assert sum(rec["by_partition_file"].values()) == 60
+
+    recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, pipe.events)
+    assert [r["chunk"] for r in recs] == ["chunk2.parquet"]
+    assert runner.events().count() == 4 * 6 * 10
+
+
+def test_chunks_run_concurrently_in_pending_order(spark, chunked_input, tmp_path):
+    """Pending chunks are processed from more than one driver thread, each
+    inheriting the caller's local properties, and the records come back in
+    pending order with the same lineage as a one-chunk-at-a-time run."""
+    pipe = SlowLogPipeline(spark)
+    sc = spark.sparkContext
+    threads, props = set(), set()
+
+    def process(docs):
+        threads.add(threading.get_ident())
+        props.add(sc.getLocalProperty("mlp.test.caller"))
+        return pipe.events(docs)
+
+    sc.setLocalProperty("mlp.test.caller", "run_incremental")
+    try:
+        recs = CheckpointedRunner(spark, str(tmp_path / "a")).run_incremental(
+            chunked_input, process
+        )
+    finally:
+        sc.setLocalProperty("mlp.test.caller", None)
+    assert len(threads) > 1
+    assert props == {"run_incremental"}
+
+    one_by_one = []
+    seq = CheckpointedRunner(spark, str(tmp_path / "b"))
+    while step := seq.run_incremental(chunked_input, pipe.events, max_chunks=1):
+        one_by_one += step
+    lineage = ("chunk", "rows_in", "events_out", "by_source")
+    assert [r["chunk"] for r in recs] == [f"chunk{i}.parquet" for i in range(4)]
+    assert [{k: r[k] for k in lineage} for r in recs] == [
+        {k: r[k] for k in lineage} for r in one_by_one
+    ]
 
 
 class _FakeReader:

@@ -3,6 +3,7 @@
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark import synth
@@ -53,6 +54,58 @@ def test_digest_job_cli(spark, tmp_path):
     gd = spark.read.parquet(f"{out}/global_digest").first()
     assert gd.total_queries == 40
     assert cd.count() == gd.unique_queries
+
+
+@pytest.mark.parametrize("mode", ["sketch", "exact"])
+@pytest.mark.parametrize("incremental", [False, True])
+def test_digest_job_event_free_input(spark, tmp_path, mode, incremental):
+    """Docs holding only mysqld banner lines parse to no events; the job
+    still writes an empty class digest and global_digest's one row of zero
+    counts (its sketch-mode row, in both modes)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mysql_log_parser_spark.operators.aggregate import global_digest
+
+    banner = (
+        "/usr/sbin/mysqld, Version: 5.6.15-log (binary). started with:\n"
+        "Tcp port: 3306  Unix socket: /var/lib/mysql/mysql.sock\n"
+        "Time                 Id Command    Argument\n"
+    )
+    toks = np.frombuffer(banner.encode(), dtype=np.uint8).astype(np.int32).tolist()
+    ind = tmp_path / "in"
+    ind.mkdir()
+    for c in range(2):
+        pq.write_table(
+            pa.table({
+                "doc_id": [f"banner:{c}:{d}" for d in range(3)],
+                "tokens": pa.array([toks] * 3, pa.list_(pa.int32())),
+                "n_tok": pa.array([len(toks)] * 3, pa.int32()),
+                "source": [f"src{d}" for d in range(3)],
+            }),
+            str(ind / f"c{c}.parquet"),
+        )
+    out = str(tmp_path / "out")
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import digest_job
+
+    digest_job.main(
+        ["--input", str(ind), "--output", out, "--mode", mode]
+        + (["--incremental"] if incremental else [])
+    )
+    ev = SlowLogPipeline(spark).events(spark.read.parquet(str(ind)))
+    assert ev.count() == 0
+    assert spark.read.parquet(f"{out}/class_digest").count() == 0
+    gd = spark.read.parquet(f"{out}/global_digest")
+    assert [(f.name, f.dataType) for f in gd.schema] == [
+        (f.name, f.dataType) for f in global_digest(ev, mode).schema
+    ]
+    rows = gd.collect()
+    assert rows == global_digest(ev, "sketch").collect()
+    assert rows[0]["total_queries"] == 0 and rows[0]["unique_queries"] == 0
+    assert rows[0]["query_time_cnt"] == 0 and rows[0]["mixed_rate_limits"] is False
 
 
 def test_spark_submit_py_files(tmp_path):

@@ -1061,6 +1061,31 @@ def test_bpe_train_dry_sample_stops_early(spark):
     merged.unpersist()
 
 
+def test_bpe_train_engine_error_propagates(spark, monkeypatch):
+    """Only corpus exhaustion ends training early: an engine error raised
+    while selecting a pair (PySparkRuntimeError is a RuntimeError) must
+    propagate, not return a silently truncated merge table."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from mysql_log_parser_spark.textops import bpe
+
+    df = spark.createDataFrame(
+        [(1, [97, 98, 97, 98, 99, 100])], "doc_id long, tokens array<int>"
+    )
+    real, calls = bpe.top_bigram, []
+
+    def failing_second_call(tokens_df):
+        calls.append(1)
+        if len(calls) == 2:
+            raise PySparkRuntimeError("simulated engine failure")
+        return real(tokens_df)
+
+    monkeypatch.setattr(bpe, "top_bigram", failing_second_call)
+    with pytest.raises(PySparkRuntimeError, match="simulated engine failure"):
+        bpe.bpe_train_n(df, 3)
+    assert len(calls) == 2
+
+
 def test_calibrate_per_source(spark):
     """Percentile rank is within-source (the same score ranks differently
     in different sources), ties share a rank (docs-strictly-below), and
