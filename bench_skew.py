@@ -7,9 +7,8 @@ per-class dimension (broadcast disabled to force the shuffle) — with AQE
 skew-join splitting ON vs OFF on fresh sessions.  Without splitting, the
 hot class's entire partition lands on one task; with it, AQE splits the
 partition and the join parallelizes.  Prints one JSON line with both
-timings.  The mergeable digest path needs no salting by construction
-(map-side partials bound any key's contribution per task); salting +
-this AQE path cover the joins and the non-mergeable exact paths.
+timings.  The digest needs no salting by construction (map-side partials
+bound any key's contribution per task); this AQE path covers the joins.
 
 Usage: python bench_skew.py [n_events]
 """

@@ -68,6 +68,7 @@ def main(argv: list[str] | None = None) -> None:
         split_rollup_digest,
     )
     from mysql_log_parser_spark.operators.checkpoint import CheckpointedRunner
+    from mysql_log_parser_spark.operators.route import route_partitioned
     from mysql_log_parser_spark.pipeline import SlowLogPipeline
     from mysql_log_parser_spark.session import build_session
 
@@ -87,7 +88,7 @@ def main(argv: list[str] | None = None) -> None:
         },
     )
     admin_filter = tuple(x for x in args.filter_admin.split(",") if x)
-    pipe = SlowLogPipeline(spark, admin_filter=admin_filter, mode=args.mode)
+    pipe = SlowLogPipeline(spark, admin_filter=admin_filter)
 
     t0 = time.perf_counter()
     if args.raw_log:
@@ -110,7 +111,7 @@ def main(argv: list[str] | None = None) -> None:
             )
         )
         if args.routed:
-            pipe.route(ev, f"{args.output}/routed")
+            route_partitioned(ev, f"{args.output}/routed")
             ev = spark.read.parquet(f"{args.output}/routed")
     elif args.incremental:
         runner = CheckpointedRunner(spark, args.output)
@@ -119,7 +120,7 @@ def main(argv: list[str] | None = None) -> None:
     else:
         ev = pipe.events(spark.read.parquet(args.input))
         if args.routed:
-            pipe.route(ev, f"{args.output}/routed")
+            route_partitioned(ev, f"{args.output}/routed")
             ev = spark.read.parquet(f"{args.output}/routed")
 
     # metrics ride the digest aggregation itself (observe = map-side

@@ -26,7 +26,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
 from mysql_log_parser_spark.functions.fingerprint import checksum, fingerprint, with_fingerprint
-from mysql_log_parser_spark.operators.aggregate import _exact_rank
+from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
+from mysql_log_parser_spark.operators.enrich import enrich_events
 from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
 
 EVENTS_PER_DOC = 20
@@ -105,6 +106,11 @@ WITH e AS (
 
 # -- queries ------------------------------------------------------------------
 
+def _qt(stat: str, alias: str | None = None) -> F.Column:
+    """A digest's query_time_<stat> column as the gates' double qt_<stat>."""
+    return F.col(f"query_time_{stat}").cast("double").alias(alias or f"qt_{stat}")
+
+
 def q_parse_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = parsed_events(spark, sf_dir)
     return ev.select(
@@ -127,22 +133,17 @@ O_PARSE_EVENTS = (
 
 
 def q_class_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = parsed_events(spark, sf_dir)
-    cnt = F.count(F.lit(1))
-    qt = F.col("query_time").cast("double")
-    vals = F.array_sort(F.collect_list(qt))
-    return ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        cnt.alias("total_queries"),
-        F.sum(qt).alias("qt_sum"),
-        F.min(qt).alias("qt_min"),
-        F.max(qt).alias("qt_max"),
-        (F.sum(qt) / cnt).alias("qt_avg"),
-        _exact_rank(vals, cnt, 95).alias("qt_p95"),
-        _exact_rank(vals, cnt, 50).alias("qt_med"),
-        F.sum("rows_sent").alias("rs_sum"),
-        F.sum("rows_examined").alias("rex_sum"),
-        F.floor(F.sum("rows_examined") / cnt).alias("rex_avg"),
+    d = class_digest(parsed_events(spark, sf_dir), mode="exact")
+    return d.select(
+        "class_id",
+        "fingerprint",
+        "total_queries",
+        *[_qt(s) for s in ("sum", "min", "max", "avg")],
+        _qt("pct95", "qt_p95"),
+        _qt("med"),
+        F.col("rows_sent_sum").alias("rs_sum"),
+        F.col("rows_examined_sum").alias("rex_sum"),
+        F.col("rows_examined_avg").alias("rex_avg"),
     )
 
 
@@ -164,18 +165,13 @@ FROM e GROUP BY fingerprint
 
 
 def q_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = parsed_events(spark, sf_dir)
-    cnt = F.count(F.lit(1))
-    qt = F.col("query_time").cast("double")
-    vals = F.array_sort(F.collect_list(qt))
-    return ev.agg(
-        cnt.alias("total_queries"),
-        F.countDistinct("class_id").alias("unique_queries"),
-        F.sum(qt).alias("qt_sum"),
-        F.min(qt).alias("qt_min"),
-        F.max(qt).alias("qt_max"),
-        _exact_rank(vals, cnt, 95).alias("qt_p95"),
-        F.sum("rows_sent").alias("rs_sum"),
+    d = global_digest(parsed_events(spark, sf_dir), mode="exact")
+    return d.select(
+        "total_queries",
+        "unique_queries",
+        *[_qt(s) for s in ("sum", "min", "max")],
+        _qt("pct95", "qt_p95"),
+        F.col("rows_sent_sum").alias("rs_sum"),
     )
 
 
@@ -211,9 +207,8 @@ FROM e GROUP BY source
 
 
 def q_enrich_team_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-join enrichment: users dim derived deterministically, then
-    per-team digest over the parsed event stream."""
-    ev = parsed_events(spark, sf_dir)
+    """Broadcast-join enrichment (operators/enrich.py): users dim derived
+    deterministically, then per-team totals over the enriched events."""
     dim = (
         spark.range(8)
         .select(
@@ -222,7 +217,7 @@ def q_enrich_team_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        ev.join(F.broadcast(dim), on="user", how="left")
+        enrich_events(parsed_events(spark, sf_dir), dim_user=dim)
         .groupBy("team")
         .agg(
             F.count(F.lit(1)).alias("events"),
@@ -332,21 +327,12 @@ SELECT class_id, kind, metric, cnt, sum, min, avg, pct95, med, max FROM n
 
 
 def q_top_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Report filter: classes with > 10% of total traffic (parser-cli.go:139).
-    The grand total comes from an unpartitioned window over the (small,
-    one-row-per-class) aggregate — one pipeline pass, no driver round-trip."""
-    from pyspark.sql import Window
+    """Report filter: classes with > 10% of total traffic (parser-cli.go:139),
+    as the report sink selects them (report.top_classes)."""
+    from mysql_log_parser_spark.report import top_classes
 
-    ev = parsed_events(spark, sf_dir)
-    cls = ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-    )
-    total = F.sum("total_queries").over(Window.partitionBy())
-    return (
-        cls.withColumn("_total", total)
-        .where(F.col("total_queries") > F.col("_total") / 10)
-        .drop("_total")
+    return top_classes(parsed_events(spark, sf_dir)).select(
+        "class_id", "fingerprint", "total_queries"
     )
 
 

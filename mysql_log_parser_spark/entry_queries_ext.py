@@ -18,7 +18,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mysql_log_parser_spark.entry_queries import _ORACLE_EVENTS_CTE, parsed_events
+from mysql_log_parser_spark.entry_queries import _ORACLE_EVENTS_CTE, _qt, parsed_events
+from mysql_log_parser_spark.operators.aggregate import (
+    class_digest,
+    example_ts,
+    global_digest,
+    stats_long,
+)
 from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
 from mysql_log_parser_spark.textops.dedup import ngram_jaccard_pairs_bruteforce
 from mysql_log_parser_spark.textops.multimodal import extract_features
@@ -185,17 +191,6 @@ FROM e GROUP BY 1
 
 # -- A9: example selection (class.go:100-116) ---------------------------------
 
-def _example_ts_col(ts: F.Column) -> F.Column:
-    """class.go:106-110 parity, in ONE place: reformat the winner's Ts to
-    ISO, blank (never null) when it does not parse."""
-    return F.coalesce(
-        F.date_format(
-            F.try_to_timestamp(ts, F.lit("yyMMdd H:mm:ss")), "yyyy-MM-dd HH:mm:ss"
-        ),
-        F.lit(""),
-    )
-
-
 def q_example_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class example = argmax query text by Query_time (tie-broken by
     event id for determinism under parallel aggregation) — max_by over a
@@ -217,8 +212,8 @@ def q_example_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         winner.getField("q").alias("example_query"),
         winner.getField("i").alias("example_id"),
         winner.getField("t").alias("example_qt"),
-        # parse-or-blank pinned end-to-end via the shared helper
-        _example_ts_col(winner.getField("ts")).alias("example_ts"),
+        # parse-or-blank pinned end-to-end via the production reformat
+        example_ts(winner.getField("ts")).alias("example_ts"),
     )
 
 
@@ -261,7 +256,7 @@ def q_example_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("total_queries"),
         winner.getField("i").alias("example_id"),
         winner.getField("t").alias("example_qt"),
-        _example_ts_col(winner.getField("ts")).alias("example_ts"),
+        example_ts(winner.getField("ts")).alias("example_ts"),
     )
 
 
@@ -511,31 +506,6 @@ EXT_QUERIES = {
 }
 
 
-# -- salted two-phase class aggregation (hot-key skew mitigation) --------------
-
-def q_salted_class_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The salted two-phase digest must agree exactly with the direct
-    derivation — counts/sums/extrema are mergeable across salt partials."""
-    from mysql_log_parser_spark.operators.aggregate import salted_class_digest
-
-    return salted_class_digest(parsed_events(spark, sf_dir), salts=16)
-
-
-O_SALTED_CLASS_AGG = _ORACLE_EVENTS_CTE + """
-SELECT upper(substr(md5(fingerprint), 17, 16)) AS class_id,
-       fingerprint,
-       count(*) AS total_queries,
-       sum(qt) AS qt_sum,
-       min(qt) AS qt_min,
-       max(qt) AS qt_max,
-       sum(qt)/count(*) AS qt_avg,
-       CAST(sum(rows_examined) AS BIGINT) AS rex_sum
-FROM e GROUP BY fingerprint
-"""
-
-EXT_QUERIES["slow_salted_class_agg"] = (q_salted_class_agg, O_SALTED_CLASS_AGG)
-
-
 # -- rollup: class + global digest in one shuffle ------------------------------
 
 def q_rollup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,13 +651,10 @@ EXT_QUERIES["slow_bucketed_join"] = (q_bucketed_join, O_BUCKETED_JOIN)
 
 def q_bool_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BoolStats {Cnt, True} per metric name, per sink, from the exploded
-    bool_metrics map — the dynamic-schema escape hatch aggregated long-form."""
-    ev = ext_parsed_events(spark, sf_dir)
-    b = ev.select("source", F.explode("bool_metrics").alias("metric", "v"))
-    return b.groupBy("source", "metric").agg(
-        F.count("v").alias("cnt"),
-        F.sum(F.col("v").cast("long")).alias("true_cnt"),
-    )
+    bool_metrics map — the dynamic-schema escape hatch aggregated long-form
+    (aggregate.stats_long's bool rows)."""
+    st = stats_long(ext_parsed_events(spark, sf_dir), ("source",))
+    return st.where(F.col("kind") == "bool").select("source", "metric", "cnt", "true_cnt")
 
 
 O_BOOL_STATS = _ORACLE_EXT_CTE + """
@@ -776,17 +743,15 @@ def q_sink_class_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """class_digest grouped by (source, class_id) — the per-sink digest the
     routed sinks feed (north_star: per-fingerprint aggregate-count parity
     per sink)."""
-    from mysql_log_parser_spark.operators.aggregate import class_digest
-
     ev = parsed_events(spark, sf_dir)
-    d = class_digest(ev, mode="exact", with_example=False, group_extra=("source",))
+    d = class_digest(ev, mode="exact", group_extra=("source",))
     return d.select(
         "source",
         "class_id",
         "fingerprint",
         "total_queries",
-        F.col("query_time_sum").cast("double").alias("qt_sum"),
-        F.col("query_time_pct95").cast("double").alias("qt_p95"),
+        _qt("sum"),
+        _qt("pct95", "qt_p95"),
         F.col("rows_sent_sum").alias("rs_sum"),
     )
 
@@ -1156,39 +1121,43 @@ def _rank_band(vals, pct, n):
     return F.element_at(vals, lo), F.element_at(vals, hi)
 
 
-def q_class_agg_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION percentile path: percentile_approx (Spark's
-    QuantileSummaries is Greenwald-Khanna; accuracy=100 == the reference's
-    GKSummary eps=0.01, ref:log/stats.go:24) gated against exact rank-error
-    bounds computed independently by both engines.  Emits the bounds (hash-
-    compared exactly) and in-bounds booleans (TRUE on the oracle side), so a
-    sketch drifting outside the GK guarantee flips the hash."""
-    from mysql_log_parser_spark.operators.aggregate import GK_ACCURACY
-
-    ev = parsed_events(spark, sf_dir)
+def _sorted_qt(ev: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Each group's exact ascending Query_time values: the reference the GK
+    rank bands are cut from."""
     qt = F.col("query_time").cast("double")
-    n = F.count(F.lit(1))
-    vals = F.array_sort(F.collect_list(qt))
-    pa = F.percentile_approx(qt, F.array(F.lit(0.5), F.lit(0.95)), F.lit(GK_ACCURACY))
-    agg = ev.groupBy("class_id").agg(
-        n.alias("total_queries"),
-        F.element_at(pa, 2).alias("_sk95"),
-        F.element_at(pa, 1).alias("_sk50"),
-        vals.alias("_vals"),
-    )
+    return ev.groupBy(*keys).agg(F.array_sort(F.collect_list(qt)).alias("_vals"))
+
+
+def _sketch_in_bands(ev: DataFrame, digest: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """A sketch-mode digest's query_time_pct95/_med against the exact eps-rank
+    bands of its group.  Emits the bounds (hash-compared exactly) and
+    in-bounds booleans (TRUE on the oracle side), so a sketch drifting
+    outside the GK guarantee flips the hash."""
+    vals = _sorted_qt(ev, keys)
+    j = digest.join(vals, list(keys)) if keys else digest.crossJoin(vals)
     cnt = F.col("total_queries")
     lo95, hi95 = _rank_band(F.col("_vals"), 95, cnt)
     lo50, hi50 = _rank_band(F.col("_vals"), 50, cnt)
-    return agg.select(
-        "class_id",
+    sk95, sk50 = F.col("query_time_pct95"), F.col("query_time_med")
+    return j.select(
+        *keys,
         cnt,
         lo95.alias("qt_lo95"),
         hi95.alias("qt_hi95"),
         lo50.alias("qt_lo50"),
         hi50.alias("qt_hi50"),
-        ((F.col("_sk95") >= lo95) & (F.col("_sk95") <= hi95)).alias("p95_in_bounds"),
-        ((F.col("_sk50") >= lo50) & (F.col("_sk50") <= hi50)).alias("p50_in_bounds"),
+        ((sk95 >= lo95) & (sk95 <= hi95)).alias("p95_in_bounds"),
+        ((sk50 >= lo50) & (sk50 <= hi50)).alias("p50_in_bounds"),
     )
+
+
+def q_class_agg_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION percentile path: class_digest's sketch mode (Spark's
+    QuantileSummaries is Greenwald-Khanna; accuracy=100 == the reference's
+    GKSummary eps=0.01, ref:log/stats.go:24) gated against exact rank-error
+    bounds computed independently by both engines."""
+    ev = parsed_events(spark, sf_dir)
+    return _sketch_in_bands(ev, class_digest(ev, mode="sketch"), ("class_id",))
 
 
 O_CLASS_AGG_SKETCH = _ORACLE_EVENTS_CTE + """
@@ -1210,39 +1179,22 @@ EXT_QUERIES["slow_class_agg_sketch"] = (q_class_agg_sketch, O_CLASS_AGG_SKETCH)
 
 def q_report_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CLI report's phi=0..1 step .05 GK ladder, per class holding >10%
-    of traffic (ref:bin/parser-cli.go:130-151): one row per (class, phi) with
-    exact eps-rank bounds and the sketch-in-bounds flag.  phi=0/1 degenerate
-    to min/max and stay in-band via the clamps."""
-    from mysql_log_parser_spark.operators.aggregate import GK_ACCURACY
+    of traffic (report.top_classes, ref:bin/parser-cli.go:130-151): one row
+    per (class, phi) with exact eps-rank bounds and the sketch-in-bounds
+    flag.  phi=0/1 degenerate to min/max and stay in-band via the clamps."""
+    from mysql_log_parser_spark.report import top_classes
 
     ev = parsed_events(spark, sf_dir)
-    qt = F.col("query_time").cast("double")
-    phis = [round(0.05 * i, 2) for i in range(21)]
-    agg = ev.groupBy("class_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.percentile_approx(
-            qt, F.array(*[F.lit(p) for p in phis]), F.lit(GK_ACCURACY)
-        ).alias("_ladder"),
-        F.array_sort(F.collect_list(qt)).alias("_vals"),
-    )
-    total = F.sum("n").over(Window.partitionBy())
-    top = agg.withColumn("_total", total).where(F.col("n") > F.col("_total") / 10)
-    lad = top.select(
-        "class_id", "n", "_vals", F.posexplode("_ladder").alias("i", "_sk")
+    top = top_classes(ev).select("class_id", F.col("total_queries").alias("n"), "ladder")
+    lad = top.join(_sorted_qt(ev, ("class_id",)), "class_id").select(
+        "class_id", "n", "_vals", F.posexplode("ladder").alias("i", "_sk")
     )
     pct = F.col("i") * 5
-    n = F.col("n")
-    lo = F.element_at(
-        "_vals", F.greatest(F.lit(1), F.floor((pct - 1) * n / 100).cast("int"))
-    )
-    hi = F.element_at(
-        "_vals",
-        F.least(n.cast("int"), F.floor((pct + 1) * n / 100).cast("int") + 2),
-    )
+    lo, hi = _rank_band(F.col("_vals"), pct, F.col("n"))
     return lad.select(
         "class_id",
         pct.cast("long").alias("phi_pct"),
-        n,
+        "n",
         lo.alias("qt_lo"),
         hi.alias("qt_hi"),
         ((F.col("_sk") >= lo) & (F.col("_sk") <= hi)).alias("in_bounds"),
@@ -1560,34 +1512,11 @@ EXT_QUERIES["slow_distinct_sketch"] = (q_distinct_sketch, O_DISTINCT_SKETCH)
 
 
 def q_global_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GlobalClass counterpart of slow_class_agg_sketch: the corpus-wide
-    percentile_approx (the global_digest production path) gated against
-    exact eps-rank bounds over ALL events."""
-    from mysql_log_parser_spark.operators.aggregate import GK_ACCURACY
-
+    """GlobalClass counterpart of slow_class_agg_sketch: global_digest's
+    sketch-mode percentiles gated against exact eps-rank bounds over ALL
+    events."""
     ev = parsed_events(spark, sf_dir)
-    qt = F.col("query_time").cast("double")
-    n = F.count(F.lit(1))
-    vals = F.array_sort(F.collect_list(qt))
-    pa = F.percentile_approx(qt, F.array(F.lit(0.5), F.lit(0.95)), F.lit(GK_ACCURACY))
-    agg = ev.agg(
-        n.alias("total_queries"),
-        F.element_at(pa, 2).alias("_sk95"),
-        F.element_at(pa, 1).alias("_sk50"),
-        vals.alias("_vals"),
-    )
-    cnt = F.col("total_queries")
-    lo95, hi95 = _rank_band(F.col("_vals"), 95, cnt)
-    lo50, hi50 = _rank_band(F.col("_vals"), 50, cnt)
-    return agg.select(
-        cnt,
-        lo95.alias("qt_lo95"),
-        hi95.alias("qt_hi95"),
-        lo50.alias("qt_lo50"),
-        hi50.alias("qt_hi50"),
-        ((F.col("_sk95") >= lo95) & (F.col("_sk95") <= hi95)).alias("p95_in_bounds"),
-        ((F.col("_sk50") >= lo50) & (F.col("_sk50") <= hi50)).alias("p50_in_bounds"),
-    )
+    return _sketch_in_bands(ev, global_digest(ev, mode="sketch"))
 
 
 O_GLOBAL_SKETCH = _ORACLE_EVENTS_CTE + """

@@ -95,14 +95,15 @@ FROM e GROUP BY source
 
 
 def q_stream_stateful_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The applyInPandasWithState running digest, run to completion over the
-    streamed corpus; final per-class state must equal the batch aggregate."""
-    from mysql_log_parser_spark.streaming.stateful import running_class_digest
+    """The running per-class digest (aggregate.class_digest as a streaming
+    aggregate in update mode), run to completion over the streamed corpus;
+    the final per-class state must equal the batch aggregate."""
+    from mysql_log_parser_spark.operators.aggregate import class_digest
 
     ind = _tokens_chunks(spark, sf_dir)
     name = f"mlp_stateful_{uuid.uuid4().hex[:8]}"
     q = (
-        running_class_digest(stream_events(spark, ind))
+        class_digest(stream_events(spark, ind), mode="sketch")
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
@@ -117,8 +118,8 @@ def q_stream_stateful_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("class_id")
         .agg(
             F.max("total_queries").alias("total_queries"),
-            F.max("qt_sum").alias("qt_sum"),
-            F.max("qt_max").alias("qt_max"),
+            F.max("query_time_sum").alias("qt_sum"),
+            F.max("query_time_max").cast("double").alias("qt_max"),
         )
     )
 

@@ -1555,7 +1555,12 @@ def _o_bpe_train_n(n: int, sample_where: str | None = None) -> str:
     bigram argmax to the training sample; the replace still rewrites every
     doc — the replay of hash-sampled training (bpe_train_sampled), valid
     because the rewrite is per-document so sampled docs evolve identically
-    in the sample-only and corpus-wide chains."""
+    in the sample-only and corpus-wide chains.
+
+    The replay assumes all n merges are learnable from the sample, as the
+    gate corpus guarantees.  It has no early stop: where Spark's loop stops
+    on a dry sample (bpe.BigramsExhausted), round i's pair here is NULL and
+    every later text becomes NULL."""
     sample_and = f" AND ({sample_where})" if sample_where else ""
     ids = (
         "list_transform(list_filter(string_split(t, ''), c -> c != ''), "
@@ -2818,6 +2823,7 @@ def q_incremental_lsh_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint) inside the loop before each index mutation, so the
     returned frame holds no parquet dependency on the scratch index."""
     import atexit
+    import os
     import shutil
     import tempfile
 
@@ -2851,7 +2857,11 @@ def q_incremental_lsh_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", gib(F.col("doc_id")).alias("text"))
         )
     )
-    idx = tempfile.mkdtemp(prefix="mlp_lsh_idx_")
+    # one scratch index per process: the previous call's verdicts are
+    # pinned, so its index can go now
+    idx = os.path.join(tempfile.gettempdir(), f"mlp_lsh_idx_{os.getpid()}")
+    shutil.rmtree(idx, ignore_errors=True)
+    os.makedirs(idx)
     atexit.register(shutil.rmtree, idx, ignore_errors=True)
     out = incremental_lsh_ingest(
         base,

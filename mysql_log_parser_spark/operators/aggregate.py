@@ -138,26 +138,26 @@ def _total() -> dict[str, Column]:
     return {"total_queries": F.count(F.lit(1))}
 
 
-def _class_aggs(mode: str, with_example: bool = True) -> dict[str, Column]:
+def example_ts(ts: Column) -> Column:
+    """The example's Ts as Go reports it: reformatted to ISO, or blank
+    (never null) when it does not parse (class.go:106-110)."""
+    return F.coalesce(
+        F.date_format(F.try_to_timestamp(ts, F.lit("yyMMdd H:mm:ss")), "yyyy-MM-dd HH:mm:ss"),
+        F.lit(""),
+    )
+
+
+def _class_aggs(mode: str) -> dict[str, Column]:
     """QueryClass aggregates (class.go:70-121), keyed by output column."""
     aggs = {"fingerprint": F.first("fingerprint"), **_total()}
     for m in _METRICS:
         aggs |= _stats(m, mode)
-    if with_example:
-        ex = F.max_by(F.struct("query", "ts"), F.col("query_time"))
-        aggs |= {
-            "example_query_time": F.max("query_time"),
-            "example_query": ex["query"],
-            # Go reformats the ts or blanks it on parse failure (class.go:106-110)
-            "example_ts": F.coalesce(
-                F.date_format(
-                    F.try_to_timestamp(ex["ts"], F.lit("yyMMdd H:mm:ss")),
-                    "yyyy-MM-dd HH:mm:ss",
-                ),
-                F.lit(""),
-            ),
-        }
-    return aggs
+    ex = F.max_by(F.struct("query", "ts"), F.col("query_time"))
+    return aggs | {
+        "example_query_time": F.max("query_time"),
+        "example_query": ex["query"],
+        "example_ts": example_ts(ex["ts"]),
+    }
 
 
 def _rate_aggs() -> dict[str, Column]:
@@ -192,7 +192,6 @@ def _global_columns() -> list[Column]:
 def class_digest(
     events: DataFrame,
     mode: str = "sketch",
-    with_example: bool = True,
     group_extra: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-query-class digest — the QueryClass aggregation
@@ -202,10 +201,15 @@ def class_digest(
     promoted metric columns (see promote_metrics).  Groups by class_id
     (+ group_extra, e.g. ("source",) for per-sink digests) and emits
     total_queries plus Query_time / Lock_time / Rows_sent / Rows_examined
-    stats and the argmax example (class.go:100-116).
+    stats and the argmax example (class.go:100-116).  Catalyst drops the
+    aggregates a caller does not select, so a projection of a few columns
+    pays only for those.  Over a streaming `events` frame this is a stateful
+    streaming aggregate: in update mode each micro-batch emits the running
+    digest of every class it touched (the reference's live class map,
+    bin/parser-cli.go:72-88).
     """
     keys = [*group_extra, "class_id"]
-    return events.groupBy(*keys).agg(*_aliased(_class_aggs(mode, with_example)))
+    return events.groupBy(*keys).agg(*_aliased(_class_aggs(mode)))
 
 
 def global_digest(events: DataFrame, mode: str = "sketch") -> DataFrame:
@@ -234,47 +238,6 @@ def histogram(events: DataFrame, col: str = "query_time", buckets: int = 20) -> 
         .groupBy(b.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy("bucket")
-    )
-
-
-def salted_class_digest(
-    events: DataFrame,
-    salts: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation for hot query classes (the north-rule's
-    explicit skew mitigation).
-
-    Phase 1 aggregates per (class_id, salt) with salt = pmod(hash(doc_id,
-    event_idx), salts), spreading a zipf-hot class over `salts` reducers;
-    phase 2 merges the mergeable partials (cnt / sum / min / max — avg is
-    derived).  Use when a single class dominates the corpus AND the final
-    agg must carry non-mergeable state (exact-mode collect_list buffers);
-    the sketch-mode digest does not need this because percentile_approx
-    partials already combine map-side (one partial sketch per map task, not
-    one shuffle row per event).
-    """
-    qt = F.col("query_time").cast("double")
-    salt = F.pmod(F.hash("doc_id", "event_idx"), F.lit(salts))
-    p1 = (
-        events.withColumn("_salt", salt)
-        .groupBy("class_id", "_salt")
-        .agg(
-            F.first("fingerprint").alias("fingerprint"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(qt).alias("qt_sum"),
-            F.min(qt).alias("qt_min"),
-            F.max(qt).alias("qt_max"),
-            F.sum("rows_examined").alias("rex_sum"),
-        )
-    )
-    return p1.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.sum("cnt").alias("total_queries"),
-        F.sum("qt_sum").alias("qt_sum"),
-        F.min("qt_min").alias("qt_min"),
-        F.max("qt_max").alias("qt_max"),
-        (F.sum("qt_sum") / F.sum("cnt")).alias("qt_avg"),
-        F.sum("rex_sum").alias("rex_sum"),
     )
 
 
@@ -307,7 +270,7 @@ def partial_class_digest(
 
 def merge_class_digests(partials: DataFrame) -> DataFrame:
     """Merge any union of partial_class_digest outputs (across chunks,
-    runs, or salt shards) into the combined per-class digest.  One keyed
+    runs, or shards) into the combined per-class digest.  One keyed
     aggregation over CLASS-cardinality rows — the events are never touched
     again, which is what makes incremental/resumed aggregation O(classes)
     instead of O(events) on restart."""

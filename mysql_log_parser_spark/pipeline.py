@@ -1,28 +1,23 @@
-"""End-to-end pipeline facade: parse -> fingerprint -> enrich -> route ->
-aggregate (the reference CLI's full dataflow, bin/parser-cli.go:43-151,
-re-expressed as a declarative DataFrame plan Catalyst can optimize whole).
+"""Pipeline facade: docs -> parsed, fingerprinted, metric-promoted events
+(the front half of the reference CLI's dataflow, bin/parser-cli.go:43-70).
+Digests, enrichment and routing are the operators' own functions
+(operators/aggregate.py, operators/enrich.py, operators/route.py).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
-from mysql_log_parser_spark.operators.enrich import enrich_events
 from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
-from mysql_log_parser_spark.operators.route import route_partitioned
 
 
 @dataclass
 class SlowLogPipeline:
     spark: SparkSession
     admin_filter: tuple[str, ...] = ()
-    mode: str = "sketch"  # percentile strategy: "sketch" at scale, "exact" for parity
-    repartition_classes: int | None = None  # explicit shuffle width for the class agg
 
     def events(self, docs: DataFrame) -> DataFrame:
         """docs(doc_id, tokens|text, source) -> parsed+fingerprinted events.
@@ -30,45 +25,3 @@ class SlowLogPipeline:
         ev = parse_slowlog(docs, admin_filter=self.admin_filter)
         ev = with_fingerprint(ev)
         return promote_metrics(ev)
-
-    def enriched(self, docs: DataFrame, dims: dict[str, DataFrame] | None = None) -> DataFrame:
-        ev = self.events(docs)
-        if dims:
-            ev = enrich_events(
-                ev,
-                dim_host=dims.get("dim_host"),
-                dim_db=dims.get("dim_db"),
-                dim_user=dims.get("dim_user"),
-            )
-        return ev
-
-    def class_digest(self, events: DataFrame, per_source: bool = False) -> DataFrame:
-        if self.repartition_classes:
-            # explicit co-location on the agg key; AQE may still coalesce
-            events = events.repartition(self.repartition_classes, F.col("class_id"))
-        return class_digest(
-            events, mode=self.mode, group_extra=("source",) if per_source else ()
-        )
-
-    def global_digest(self, events: DataFrame) -> DataFrame:
-        return global_digest(events, mode=self.mode)
-
-    def route(self, events: DataFrame, base_path: str) -> None:
-        route_partitioned(events, base_path)
-
-    def run(
-        self,
-        docs: DataFrame,
-        dims: dict[str, DataFrame] | None = None,
-        route_path: str | None = None,
-    ) -> dict[str, DataFrame]:
-        ev = self.enriched(docs, dims)
-        if route_path:
-            self.route(ev, route_path)
-            ev = self.spark.read.parquet(route_path)  # reuse routed data for aggs
-        return {
-            "events": ev,
-            "class_digest": self.class_digest(ev),
-            "class_digest_per_source": self.class_digest(ev, per_source=True),
-            "global_digest": self.global_digest(ev),
-        }

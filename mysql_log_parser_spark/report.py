@@ -9,7 +9,7 @@ from the GK sketch (percentile_approx == GKSummary), exact p95/med, a
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark.operators.aggregate import GK_ACCURACY
@@ -17,11 +17,45 @@ from mysql_log_parser_spark.operators.aggregate import GK_ACCURACY
 PHIS = [round(0.05 * i, 2) for i in range(21)]
 
 
+def _ladder_agg(col: str = "query_time") -> Column:
+    """The phi=0..1 step .05 Query_time ladder from one GK sketch."""
+    return F.percentile_approx(F.col(col).cast("double"), PHIS, GK_ACCURACY)
+
+
 def _ladder(events: DataFrame, col: str = "query_time") -> list[float]:
-    row = events.agg(
-        F.percentile_approx(F.col(col).cast("double"), PHIS, GK_ACCURACY).alias("l")
-    ).first()
+    row = events.agg(_ladder_agg(col).alias("l")).first()
     return list(row.l) if row.l else []
+
+
+def _rate_weight(events: DataFrame) -> Column:
+    """Sessions one logged event stands for (pt-query-digest's observed*N
+    math, surfaced by the reference CLI's digest; ref bin/parser-cli.go:
+    124-151): its Log_slow_rate_limit, with 0 (no rate limiting seen)
+    counting as itself.  Summing per event is exact even when sinks carry
+    different limits."""
+    if "rate_limit" in events.columns:
+        return F.greatest(F.col("rate_limit"), F.lit(1))
+    return F.lit(1)
+
+
+def top_classes(events: DataFrame) -> DataFrame:
+    """The report's per-class blocks: every class holding more than 10% of
+    all events (10 * total_queries > total, bin/parser-cli.go:139), with
+    its fingerprint, rate-limit corrected count and GK ladder.  The total
+    comes from an unpartitioned window over the class-sized aggregate, so
+    this is one pass over the events and no driver round-trip."""
+    classes = events.groupBy("class_id").agg(
+        F.first("fingerprint").alias("fingerprint"),
+        F.count(F.lit(1)).alias("total_queries"),
+        F.sum(_rate_weight(events)).cast("long").alias("corrected_queries"),
+        _ladder_agg().alias("ladder"),
+    )
+    total = F.sum("total_queries").over(Window.partitionBy())
+    return (
+        classes.withColumn("_total", total)
+        .where(10 * F.col("total_queries") > F.col("_total"))
+        .drop("_total")
+    )
 
 
 def _histogram_lines(events: DataFrame, col: str = "query_time", buckets: int = 20) -> list[str]:
@@ -36,23 +70,12 @@ def _histogram_lines(events: DataFrame, col: str = "query_time", buckets: int = 
     return out
 
 
-def digest_report(
-    events: DataFrame,
-    elapsed_sec: float | None = None,
-    top_fraction: float = 0.1,
-) -> str:
+def digest_report(events: DataFrame, elapsed_sec: float | None = None) -> str:
     """Render the text digest for a parsed+fingerprinted+promoted events DF."""
     ev = events.persist()
     try:
         total = ev.count()
-        # Sampling correction (pt-query-digest's observed*N math, surfaced
-        # by the reference CLI's digest; ref bin/parser-cli.go:124-151):
-        # each logged event stands for Log_slow_rate_limit actual sessions,
-        # so corrected traffic = sum of per-event rate limits (0 = no rate
-        # limiting seen = counts as itself).  Summing per event is exact
-        # even when sinks carry different limits.
-        rl = F.greatest(F.col("rate_limit"), F.lit(1)) if "rate_limit" in ev.columns else F.lit(1)
-        corrected_total = ev.agg(F.sum(rl).cast("long").alias("c")).first()["c"] or 0
+        corrected_total = ev.agg(F.sum(_rate_weight(ev)).cast("long").alias("c")).first()["c"] or 0
         lines = []
         if elapsed_sec:
             lines.append(
@@ -72,21 +95,7 @@ def digest_report(
             lines.append(f"{phi:.2f} pct query time : {val:.6f}")
         lines += _histogram_lines(ev)
 
-        classes = (
-            ev.groupBy("class_id")
-            .agg(
-                F.count(F.lit(1)).alias("total_queries"),
-                F.sum(rl).cast("long").alias("corrected_queries"),
-                F.first("fingerprint").alias("fingerprint"),
-                F.percentile_approx(
-                    F.col("query_time").cast("double"), PHIS, GK_ACCURACY
-                ).alias("ladder"),
-            )
-            .where(F.col("total_queries") > total * top_fraction)
-            .orderBy(F.desc("total_queries"))
-            .collect()
-        )
-        for c in classes:
+        for c in top_classes(ev).orderBy(F.desc("total_queries")).collect():
             if c.corrected_queries != c.total_queries:
                 lines.append(
                     f"Query ID {c.class_id}, Events: {c.total_queries} "

@@ -1,17 +1,13 @@
-"""Custom stateful streaming operator: running per-class digest.
+"""Custom stateful streaming operator: per-source Misra-Gries heavy hitters.
 
-The reference's aggregator goroutine keeps a live ``map[classId]*QueryClass``
-that grows monotonically as events stream off the channel
-(bin/parser-cli.go:72-88, class.go:96-117).  The Spark-native equivalent of
-that *continuously updated* accumulator — as opposed to the per-window
-aggregation in streaming/pipeline.py — is an ``applyInPandasWithState``
-operator: explicit keyed state (cnt / sum / min / max of Query_time),
-merged per micro-batch from Arrow-vectorized pandas slices, emitted in
-`update` mode after every batch.
-
-State is bounded: O(1) per query class, mergeable, survives restart via the
-streaming checkpoint — exactly the contract of the reference's in-memory
-class map plus durability it never had.
+A built-in streaming aggregate covers any state Spark can merge itself (the
+running per-class digest is aggregate.class_digest over the event stream in
+update mode).  A Misra-Gries summary is not one of those: its merge step
+(textops/heavyhitters._mg_merge) is Python, so it runs as an
+``applyInPandasWithState`` operator with explicit keyed state, merged per
+micro-batch from Arrow-vectorized pandas slices and emitted in `update` mode
+after every batch.  State is O(k) per source and survives restart via the
+streaming checkpoint.
 """
 
 from __future__ import annotations
@@ -23,59 +19,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = (
-    "class_id string, total_queries long, qt_sum double, qt_min double, qt_max double"
-)
-STATE_SCHEMA = "cnt long, qt_sum double, qt_min double, qt_max double"
-
-
-def _update(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    cnt, qsum, qmin, qmax = (
-        state.get if state.exists else (0, 0.0, float("inf"), float("-inf"))
-    )
-    for pdf in pdfs:
-        qt = pd.to_numeric(pdf["query_time"], errors="coerce").fillna(0.0)
-        if len(qt):
-            cnt += int(len(qt))
-            qsum += float(qt.sum())
-            qmin = min(qmin, float(qt.min()))
-            qmax = max(qmax, float(qt.max()))
-    state.update((cnt, qsum, qmin, qmax))
-    yield pd.DataFrame(
-        {
-            "class_id": [key[0]],
-            "total_queries": [cnt],
-            "qt_sum": [qsum],
-            "qt_min": [qmin],
-            "qt_max": [qmax],
-        }
-    )
-
-
-def running_class_digest(events: DataFrame) -> DataFrame:
-    """Streaming events -> continuously updated per-class digest.
-
-    `events` is the (streaming) output of parse_slowlog + promote_metrics;
-    only (class_id, query_time) are consumed, so Catalyst prunes the rest
-    before the state exchange.
-    """
-    return (
-        events.select("class_id", "query_time")
-        .groupBy("class_id")
-        .applyInPandasWithState(
-            _update,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 MG_OUTPUT_SCHEMA = "source string, n_seen long, tokens array<int>, weights array<long>"
 MG_STATE_SCHEMA = "n_seen long, tokens array<int>, weights array<long>"

@@ -19,3 +19,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line per read-only fixture tree counting the tests skipped for
+    want of it, so a run without them never passes for full coverage."""
+    reasons = [
+        r.longrepr[2] if isinstance(r.longrepr, tuple) else str(r.longrepr)
+        for r in terminalreporter.stats.get("skipped", [])
+    ]
+    for key, what in (
+        ("reference", f"reference fixtures ({REFERENCE_LOGS}) absent"),
+        ("testdata", "sf test data absent"),
+    ):
+        n = sum(key in r for r in reasons)
+        terminalreporter.write_line(f"{n} tests skipped: {what}")

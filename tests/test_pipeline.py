@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark import synth
+from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
 from mysql_log_parser_spark.operators.enrich import build_dims, enrich_events
 from mysql_log_parser_spark.operators.route import read_sink, route_partitioned, sink_counts
 from mysql_log_parser_spark.pipeline import SlowLogPipeline
@@ -99,10 +100,9 @@ def test_enrich_broadcast(spark, synth_docs):
 
 
 def test_digests(spark, synth_docs):
-    pipe = SlowLogPipeline(spark, mode="exact")
-    ev = pipe.events(synth_docs).persist()
-    cd = pipe.class_digest(ev)
-    gd = pipe.global_digest(ev).first()
+    ev = SlowLogPipeline(spark).events(synth_docs).persist()
+    cd = class_digest(ev, mode="exact")
+    gd = global_digest(ev, mode="exact").first()
     total = ev.count()
     assert gd.total_queries == total
     assert gd.unique_queries == cd.count()

@@ -89,6 +89,33 @@ def test_digest_job_parses_once(spark, tokens_dir):
         assert "MapInArrow" not in _plan(out)
 
 
+def test_streaming_digest_is_a_builtin_aggregate(spark, tokens_dir):
+    """The running per-class digest is class_digest as a stateful streaming
+    aggregate: no pandas-state operator, and no Python node besides the
+    parse's one MapInArrow."""
+    import re
+
+    from mysql_log_parser_spark.streaming.pipeline import stream_events
+
+    q = (
+        class_digest(stream_events(spark, tokens_dir), mode="sketch")
+        .writeStream.format("memory")
+        .queryName("plan_guard_digest")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    python_nodes = re.findall(r"\b\w*(?:Python|Pandas|Arrow)\w*", plan)
+    assert python_nodes == ["MapInArrow"], python_nodes
+
+
 def _docs_df(spark):
     return spark.createDataFrame(
         [(i, f"src{i % 3}", f"some words repeated words here doc {i}") for i in range(30)],
@@ -258,8 +285,9 @@ def test_aqe_splits_skewed_join(spark):
 
     Also pinned here: when the DOWNSTREAM aggregate is keyed on the join
     key itself, AQE refuses to split (splitting would break the required
-    hash distribution) — which is precisely the case the salted two-phase
-    digest (operators/aggregate.salted_class_digest) exists for."""
+    hash distribution).  The class digest itself needs no split: map-side
+    partial aggregation reduces a hot class to one row per map task before
+    its shuffle."""
     from pyspark.sql import functions as F
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -288,7 +316,7 @@ def test_aqe_splits_skewed_join(spark):
         assert "skew=true" in plan, f"AQE did not split the hot partition:\n{plan[:2000]}"
 
         # non-splittable shape: agg keyed on the join key — AQE must NOT
-        # split (and the engine's answer there is the salted digest)
+        # split
         j2 = ev.join(dim, "class_id").groupBy("class_id").count()
         j2.collect()
         plan2 = j2._jdf.queryExecution().executedPlan().toString()

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from mysql_log_parser_spark import synth
 from mysql_log_parser_spark.pipeline import SlowLogPipeline
-from mysql_log_parser_spark.report import digest_report
+from mysql_log_parser_spark.report import digest_report, top_classes
 
 
 def test_digest_report(spark, tmp_path):
@@ -35,6 +35,22 @@ def test_digest_report_rate_corrected(spark, tmp_path):
     rep = digest_report(ev)
     assert "Rate-limit corrected events: 20000 (observed 200" in rep
     assert "(rate-limit corrected: " in rep  # per-class line
+
+
+def test_top_classes_boundary(spark):
+    """A class holding exactly 10% of the events is not reported; one event
+    more and it is (10 * total_queries > total, bin/parser-cli.go:139)."""
+    classes = ["at10"] * 10 + ["above10"] * 11 + [f"c{i}" for i in range(79)]
+    ev = spark.createDataFrame(
+        [(c, f"select {c}", 1.0) for c in classes],
+        "class_id string, fingerprint string, query_time double",
+    )
+    rows = top_classes(ev).collect()
+    assert [(r.class_id, r.total_queries, r.corrected_queries) for r in rows] == [
+        ("above10", 11, 11)
+    ]
+    assert rows[0].fingerprint == "select above10"
+    assert len(rows[0].ladder) == 21 and set(rows[0].ladder) == {1.0}
 
 
 def test_digest_job_cli(spark, tmp_path):

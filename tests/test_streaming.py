@@ -58,17 +58,25 @@ def test_windowed_counts_stream(spark, tmp_path):
     assert rows.s == 4 * 10
 
 
+def _rank_band(vals, pct, n):
+    """Values at the 1-based ranks bounding a GK(eps=0.01) answer for
+    phi=pct/100 over the sorted `vals`: [max(1, (pct-1)*n//100),
+    min(n, (pct+1)*n//100 + 2)], the slow_class_agg_sketch gate's rule."""
+    return vals[max(1, (pct - 1) * n // 100) - 1], vals[min(n, (pct + 1) * n // 100 + 2) - 1]
+
+
 def test_stateful_running_digest(spark, tmp_path):
-    """applyInPandasWithState: per-class state must accumulate ACROSS
-    micro-batches (after chunk 2, totals include chunk 1's events)."""
-    from mysql_log_parser_spark.streaming.stateful import running_class_digest
+    """class_digest as a streaming aggregate in update mode: per-class state
+    must accumulate ACROSS micro-batches (after chunk 2, totals include
+    chunk 1's events), and the final state is the batch digest."""
+    from mysql_log_parser_spark.operators.aggregate import class_digest
 
     ind = tmp_path / "in"
     ind.mkdir()
     synth.generate_parquet(str(ind / "c0.parquet"), n_docs=4, events_per_doc=6, seed=7)
 
     q = (
-        running_class_digest(stream_events(spark, str(ind)))
+        class_digest(stream_events(spark, str(ind)), mode="sketch")
         .writeStream.format("memory")
         .queryName("running_digest")
         .outputMode("update")
@@ -88,20 +96,30 @@ def test_stateful_running_digest(spark, tmp_path):
     finally:
         q.stop()
 
-    # memory sink keeps every update row; the running total per class is the
-    # max (counts are monotone)
-    rows = spark.sql(
-        "select class_id, max(total_queries) n from running_digest group by class_id"
-    ).collect()
-    got = {r.class_id: r.n for r in rows}
-    assert sum(got.values()) == 2 * 4 * 6
+    # memory sink keeps every update row; a class's final state is its row
+    # with the largest (monotone) count
+    final = {}
+    for r in spark.sql("select * from running_digest").collect():
+        if r.class_id not in final or r.total_queries > final[r.class_id].total_queries:
+            final[r.class_id] = r
+    assert sum(r.total_queries for r in final.values()) == 2 * 4 * 6
 
     batch = SlowLogPipeline(spark).events(spark.read.parquet(str(ind)))
-    want = {
-        r.class_id: r.cnt
-        for r in batch.groupBy("class_id").agg(F.count("*").alias("cnt")).collect()
+    exact = ["total_queries", "query_time_sum", "query_time_min", "query_time_max"]
+    want = {r.class_id: r for r in class_digest(batch, mode="sketch").collect()}
+    assert {k: [r[c] for c in exact] for k, r in final.items()} == {
+        k: [r[c] for c in exact] for k, r in want.items()
     }
-    assert got == want
+
+    vals = {
+        r.class_id: sorted(r.v)
+        for r in batch.groupBy("class_id").agg(F.collect_list("query_time").alias("v")).collect()
+    }
+    for k, r in final.items():
+        n = r.query_time_cnt
+        for pct, got in ((50, r.query_time_med), (95, r.query_time_pct95)):
+            lo, hi = _rank_band(vals[k], pct, n)
+            assert lo <= got <= hi, (k, pct, got, lo, hi)
 
 
 def _ts_docs(spark, path, minutes, start_id=0):
