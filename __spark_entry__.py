@@ -32,17 +32,15 @@ def entry(spark: SparkSession) -> DataFrame:
     corpus derived from /root/testdata/sf0.001 (tokens path exercised)."""
     from pyspark.sql import functions as F
 
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
     from mysql_log_parser_spark.operators.aggregate import class_digest
-    from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
+    from mysql_log_parser_spark.pipeline import events
 
     docs = EQ.docs_from_events(spark, "/root/testdata/sf0.001")
     tokens_tbl = docs.select(
         "doc_id", EQ.encode_tokens("text").alias("tokens"), "source"
     ).withColumn("n_tok", F.size("tokens"))
 
-    ev = promote_metrics(with_fingerprint(parse_slowlog(tokens_tbl)))
-    return class_digest(ev, mode="sketch")
+    return class_digest(events(tokens_tbl), mode="sketch")
 
 
 # Entries without a CURRENT-round driver CORRECTNESS row enumerate FIRST:

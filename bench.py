@@ -139,28 +139,20 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from mysql_log_parser_spark import entry_queries as EQ
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
     from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
-    from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
     from mysql_log_parser_spark.operators.route import route_partitioned
-    from mysql_log_parser_spark.session import build_session
+    from mysql_log_parser_spark.pipeline import events
+    from mysql_log_parser_spark.session import TOKEN_SCAN_CONF, build_session
 
-    # Token docs expand ~20x through the parse (array<int32> -> event rows),
-    # so input splits must be sized for the EXPANDED working set: small
-    # maxPartitionBytes gives one prepared file per split (256 tasks) with NO
-    # shuffle of the raw tokens — repartitioning fat token rows costs a
-    # multi-GB shuffle write that dominates the job (measured: 17 JVM threads
-    # in shuffle-file write0 while Python workers idle).
+    # Small maxPartitionBytes gives one prepared file per split (256 tasks)
+    # with NO shuffle of the raw tokens — repartitioning fat token rows
+    # costs a multi-GB shuffle write that dominates the job (measured: 17
+    # JVM threads in shuffle-file write0 while Python workers idle).
     spark = build_session(
         app_name="mlp-spark-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=max(8, 2 * cpus),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.files.openCostInBytes": "4m",
-            "spark.sql.parquet.columnarReaderBatchSize": "256",
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-        },
+        extra_conf=TOKEN_SCAN_CONF,
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -172,8 +164,7 @@ def main() -> None:
         # One file per input split (maxPartitionBytes above): 256 parse tasks,
         # zero shuffle before the class agg — identical plan at every
         # parallelism level.
-        tokens = spark.read.parquet(tokens_path)
-        return promote_metrics(with_fingerprint(parse_slowlog(tokens)))
+        return events(spark.read.parquet(tokens_path))
 
     # Warmup: one full materialization — warms JVM codegen, Arrow paths, and
     # every reused Python worker (first-task page-fault/alloc warmup is a

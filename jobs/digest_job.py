@@ -5,8 +5,9 @@
       jobs/digest_job.py --input /path/tokens_parquet --output /path/out \
       [--mode sketch|exact] [--filter-admin Quit,Ping] [--routed] [--report]
 
-Reads the tokens table, runs parse -> fingerprint -> enrich-ready events,
-writes per-source routed events plus class/global digests, optionally prints
+Reads docs from the tokens table (or a raw log with --raw-log), turns them
+into parsed, fingerprinted events with pipeline.events, optionally writes
+per-source routed events, writes class/global digests and optionally prints
 the text report.  All progress is chunk-resumable when --incremental is given
 (input treated as a directory of chunk files; manifest under --output).
 
@@ -69,59 +70,36 @@ def main(argv: list[str] | None = None) -> None:
     )
     from mysql_log_parser_spark.operators.checkpoint import CheckpointedRunner
     from mysql_log_parser_spark.operators.route import route_partitioned
-    from mysql_log_parser_spark.pipeline import SlowLogPipeline
-    from mysql_log_parser_spark.session import build_session
+    from mysql_log_parser_spark.pipeline import events
+    from mysql_log_parser_spark.session import TOKEN_SCAN_CONF, build_session
 
     pre_existing = SparkSession.getActiveSession() is not None
-    # Token docs expand ~20x through the parse (array<int32> -> event rows):
-    # size input splits for the EXPANDED working set and keep parquet/Arrow
-    # batches small on fat array rows (measured deltas in BENCH.md).  All
-    # runtime-settable SQL confs, so they apply under spark-submit too.
     spark = build_session(
         app_name="mlp-digest-job",
         # don't retune a session some host process already owns
-        extra_conf=None if pre_existing else {
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.files.openCostInBytes": "4m",
-            "spark.sql.parquet.columnarReaderBatchSize": "256",
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-        },
+        extra_conf=None if pre_existing else TOKEN_SCAN_CONF,
     )
     admin_filter = tuple(x for x in args.filter_admin.split(",") if x)
-    pipe = SlowLogPipeline(spark, admin_filter=admin_filter)
 
     t0 = time.perf_counter()
-    if args.raw_log:
-        from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-        from mysql_log_parser_spark.operators.parse import promote_metrics
-        from mysql_log_parser_spark.sources.rawlog import read_raw_slowlog
-
-        ev = promote_metrics(
-            with_fingerprint(
-                read_raw_slowlog(
-                    spark,
-                    args.input,
-                    chunk_bytes=args.chunk_mb << 20,
-                    admin_filter=admin_filter,
-                    # source=None (default): every event is tagged with its
-                    # file's basename — for a single file that IS the file
-                    # name, and for a directory of rotated logs each file
-                    # keeps its own sink instead of collapsing to one
-                )
-            )
-        )
-        if args.routed:
-            route_partitioned(ev, f"{args.output}/routed")
-            ev = spark.read.parquet(f"{args.output}/routed")
-    elif args.incremental:
+    if args.incremental:
         runner = CheckpointedRunner(spark, args.output)
-        runner.run_incremental(args.input, pipe.events)
+        runner.run_incremental(args.input, lambda docs: events(docs, admin_filter))
         ev = runner.events()
     else:
-        ev = pipe.events(spark.read.parquet(args.input))
-        if args.routed:
-            route_partitioned(ev, f"{args.output}/routed")
-            ev = spark.read.parquet(f"{args.output}/routed")
+        if args.raw_log:
+            from mysql_log_parser_spark.sources.rawlog import read_raw_docs
+
+            # source=None (default): every event is tagged with its file's
+            # basename — for a single file that IS the file name, and for a
+            # directory of rotated logs each file keeps its own sink
+            docs = read_raw_docs(spark, args.input, chunk_bytes=args.chunk_mb << 20)
+        else:
+            docs = spark.read.parquet(args.input)
+        ev = events(docs, admin_filter)
+    if args.routed:
+        route_partitioned(ev, f"{args.output}/routed")
+        ev = spark.read.parquet(f"{args.output}/routed")
 
     # metrics ride the digest aggregation itself (observe = map-side
     # counters on the existing action; no extra pass) — the north rule's

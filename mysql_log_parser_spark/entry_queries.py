@@ -25,10 +25,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
-from mysql_log_parser_spark.functions.fingerprint import checksum, fingerprint, with_fingerprint
+from mysql_log_parser_spark.functions.fingerprint import checksum, fingerprint
 from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
 from mysql_log_parser_spark.operators.enrich import enrich_events
-from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
+from mysql_log_parser_spark.pipeline import events
 
 EVENTS_PER_DOC = 20
 
@@ -60,16 +60,20 @@ def encode_tokens(texts: pd.Series) -> pd.Series:
     )
 
 
-def docs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet -> deterministic multi-event docs (doc_id, text, source)."""
+def render_docs(
+    spark: SparkSession, sf_dir: str, event_text: F.Column, prefix: str
+) -> DataFrame:
+    """events.parquet -> deterministic docs (doc_id, text, source): every
+    EVENTS_PER_DOC consecutive event ids, each rendered by `event_text`,
+    form doc `prefix`<n> in event-id order; doc n goes to source s<n % 4>."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     per = ev.select(
         F.floor(F.col("event_id") / EVENTS_PER_DOC).cast("long").alias("dnum"),
         F.col("event_id"),
-        _event_text().alias("txt"),
+        event_text.alias("txt"),
     )
     return per.groupBy("dnum").agg(
-        F.concat(F.lit("d"), F.col("dnum").cast("string")).alias("doc_id"),
+        F.concat(F.lit(prefix), F.col("dnum").cast("string")).alias("doc_id"),
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("event_id", "txt"))), lambda x: x["txt"]
@@ -80,10 +84,13 @@ def docs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("dnum")
 
 
+def docs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return render_docs(spark, sf_dir, _event_text(), "d")
+
+
 def parsed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real pipeline over the rendered corpus."""
-    ev = parse_slowlog(docs_from_events(spark, sf_dir))
-    return promote_metrics(with_fingerprint(ev))
+    return events(docs_from_events(spark, sf_dir))
 
 
 _ORACLE_EVENTS_CTE = f"""

@@ -18,14 +18,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mysql_log_parser_spark.entry_queries import _ORACLE_EVENTS_CTE, _qt, parsed_events
+from mysql_log_parser_spark.entry_queries import (
+    _ORACLE_EVENTS_CTE,
+    _event_text,
+    _qt,
+    docs_from_events,
+    encode_tokens,
+    parsed_events,
+    render_docs,
+)
 from mysql_log_parser_spark.operators.aggregate import (
     class_digest,
     example_ts,
     global_digest,
     stats_long,
 )
-from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
+from mysql_log_parser_spark.operators.parse import parse_slowlog
+from mysql_log_parser_spark.pipeline import events
 from mysql_log_parser_spark.textops.dedup import ngram_jaccard_pairs_bruteforce
 from mysql_log_parser_spark.textops.multimodal import extract_features
 from mysql_log_parser_spark.textops.similarity import cosine
@@ -67,34 +76,11 @@ def _ext_event_text() -> F.Column:
 
 
 def ext_docs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    per = ev.select(
-        F.floor(F.col("event_id") / EVENTS_PER_DOC).cast("long").alias("dnum"),
-        F.col("event_id"),
-        _ext_event_text().alias("txt"),
-    )
-    return (
-        per.groupBy("dnum")
-        .agg(
-            F.concat(F.lit("x"), F.col("dnum").cast("string")).alias("doc_id"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("event_id", "txt"))),
-                    lambda x: x["txt"],
-                ),
-                "",
-            ).alias("text"),
-            F.concat(F.lit("s"), (F.col("dnum") % 4).cast("string")).alias("source"),
-        )
-        .drop("dnum")
-    )
+    return render_docs(spark, sf_dir, _ext_event_text(), "x")
 
 
-def ext_parsed_events(
-    spark: SparkSession, sf_dir: str, admin_filter=None
-) -> DataFrame:
-    docs = ext_docs_from_events(spark, sf_dir)
-    return promote_metrics(parse_slowlog(docs, admin_filter=admin_filter))
+def ext_parsed_events(spark: SparkSession, sf_dir: str, admin_filter=()) -> DataFrame:
+    return events(ext_docs_from_events(spark, sf_dir), admin_filter)
 
 
 _ORACLE_EXT_CTE = f"""
@@ -242,9 +228,7 @@ def q_example_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reparsed and reformatted (class.go:106-110), so the hash covers both the
     winner selection of ts and the yyMMdd->ISO reformat.  Admin events are
     excluded so the statement fingerprints match the oracle's derivation."""
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-
-    ev = with_fingerprint(ext_parsed_events(spark, sf_dir)).where(~F.col("admin"))
+    ev = ext_parsed_events(spark, sf_dir).where(~F.col("admin"))
     ev = ev.withColumn("eid", F.regexp_extract("query", "id=(\\d+)", 1).cast("long"))
     qt = F.col("query_time").cast("double")
     winner = F.max_by(
@@ -677,8 +661,6 @@ def q_resume_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     event's first byte, so event 0 of every doc is skipped and the remaining
     events parse cleanly — the reference's caller-persisted StartOffset
     contract (slow.go:43-49) expressed as a per-doc column."""
-    from mysql_log_parser_spark.entry_queries import _event_text, docs_from_events
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     first_len = (
         ev.where(F.col("event_id") % EVENTS_PER_DOC == 0)
@@ -692,8 +674,7 @@ def q_resume_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     docs = docs_from_events(spark, sf_dir).join(first_len, "doc_id")
-    parsed = promote_metrics(parse_slowlog(docs))
-    return parsed.groupBy("source").agg(
+    return events(docs).groupBy("source").agg(
         F.count(F.lit(1)).alias("kept_rows"),
         F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
     )
@@ -1234,10 +1215,7 @@ def q_rawlog_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-    from mysql_log_parser_spark.operators.parse import promote_metrics
-    from mysql_log_parser_spark.sources.rawlog import read_raw_slowlog
-    from mysql_log_parser_spark.entry_queries import docs_from_events
+    from mysql_log_parser_spark.sources.rawlog import read_raw_docs
 
     # corpus-sized scratch file: must outlive the returned (lazy) DataFrame,
     # so cleanup is deferred to interpreter exit rather than leaked entirely
@@ -1253,15 +1231,9 @@ def q_rawlog_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(path, "w") as f:
         for r in ordered.toLocalIterator():
             f.write(r["text"])
-    ev = promote_metrics(
-        with_fingerprint(
-            read_raw_slowlog(spark, path, chunk_bytes=64 << 10, overlap=32 << 10)
-        )
-    )
-    return ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-        F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
+    ev = events(read_raw_docs(spark, path, chunk_bytes=64 << 10, overlap=32 << 10))
+    return class_digest(ev, mode="exact").select(
+        "class_id", "fingerprint", "total_queries", _qt("sum")
     )
 
 
@@ -1278,6 +1250,18 @@ EXT_QUERIES["slow_rawlog_chunked"] = (q_rawlog_chunked, O_RAWLOG_CHUNKED)
 
 # -- checkpointed resume: crash after one chunk, restart, digest everything ---
 
+def _class_sums(ev: DataFrame) -> DataFrame:
+    """Per-class count and Query_time / Rows_examined sums, read off the
+    production class digest."""
+    return class_digest(ev, mode="exact").select(
+        "class_id",
+        "fingerprint",
+        "total_queries",
+        _qt("sum"),
+        F.col("rows_examined_sum").alias("rex_sum"),
+    )
+
+
 def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The resume contract end-to-end through the REAL checkpoint machinery
     (operators/checkpoint.py): the corpus is split into 3 tokens chunks, a
@@ -1292,8 +1276,6 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mysql_log_parser_spark.entry_queries import docs_from_events
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
     from mysql_log_parser_spark.operators.checkpoint import CheckpointedRunner
 
     ind = tempfile.mkdtemp(prefix="mlp_ckpt_in_")
@@ -1306,21 +1288,12 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{ind}/c{i}.parquet")
 
-    def process(chunk_docs: DataFrame) -> DataFrame:
-        return promote_metrics(with_fingerprint(parse_slowlog(chunk_docs)))
-
     first = CheckpointedRunner(spark, out)
-    first.run_incremental(ind, process, max_chunks=1)  # "crash" after 1 chunk
-    restarted = CheckpointedRunner(spark, out)         # fresh runner, same manifest
-    recs = restarted.run_incremental(ind, process)
+    first.run_incremental(ind, events, max_chunks=1)  # "crash" after 1 chunk
+    restarted = CheckpointedRunner(spark, out)        # fresh runner, same manifest
+    recs = restarted.run_incremental(ind, events)
     assert len(recs) == 2, f"restart reprocessed {3 - len(recs)} committed chunks"
-    ev = restarted.events()
-    return ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-        F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
-        F.sum("rows_examined").alias("rex_sum"),
-    )
+    return _class_sums(restarted.events())
 
 
 O_CHECKPOINT_RESUME = _ORACLE_EVENTS_CTE + """
@@ -1419,9 +1392,7 @@ def q_spike_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over integers — immune to float summation-order drift
     between partitions or engines; stddev_pop-style accumulation is NOT
     used for exactly that reason."""
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-
-    ev = with_fingerprint(ext_parsed_events(spark, sf_dir)).where(~F.col("admin"))
+    ev = ext_parsed_events(spark, sf_dir).where(~F.col("admin"))
     mm = F.minute(F.to_timestamp("ts", "yyMMdd H:mm:ss")).cast("long")
     per_min = ev.groupBy("class_id", mm.alias("mm")).agg(
         F.count(F.lit(1)).alias("c")
@@ -1616,8 +1587,6 @@ def q_line_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, same bound as sequence packing).  The oracle re-renders all four
     line forms per event from the events table with printf and replays the
     filter with list ops, so a one-character render drift flips the hash."""
-    from mysql_log_parser_spark.entry_queries import docs_from_events
-
     docs = docs_from_events(spark, sf_dir)
     lines = docs.select(
         "doc_id", F.posexplode(F.split("text", "\n")).alias("pos", "line")
@@ -1700,10 +1669,8 @@ def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials; the rank window is partitioned BY WINDOW, so each
     partition holds at most |classes| rows — never a global exchange.
     Admin commands are excluded (they carry no statement class)."""
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-
     ev = (
-        with_fingerprint(ext_parsed_events(spark, sf_dir))
+        ext_parsed_events(spark, sf_dir)
         .where(~F.col("admin"))
         .withColumn("ts_parsed", F.to_timestamp("ts", "yyMMdd H:mm:ss"))
     )
@@ -1752,7 +1719,6 @@ def q_db_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     its statement, which the parser must consume as that EVENT's db (not
     part of the query, no carry-over), while all other events keep an
     empty db.  Exercises the full render -> tokens -> parse path."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     eid = F.col("event_id")
     txt = F.concat(
         F.lit("# Time: 240101 10:00:00\n"),
@@ -1771,23 +1737,7 @@ def q_db_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
             "SELECT c FROM t_%s WHERE id=%d;\n", F.col("event_type"), eid
         ),
     )
-    per = ev.select(
-        F.floor(eid / EVENTS_PER_DOC).cast("long").alias("dnum"),
-        eid.alias("event_id"),
-        txt.alias("txt"),
-    )
-    docs = per.groupBy("dnum").agg(
-        F.concat(F.lit("d"), F.col("dnum").cast("string")).alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("event_id", "txt"))),
-                lambda x: x["txt"],
-            ),
-            "",
-        ).alias("text"),
-        F.concat(F.lit("s"), (F.col("dnum") % 4).cast("string")).alias("source"),
-    ).drop("dnum")
-    parsed = parse_slowlog(docs)
+    parsed = parse_slowlog(render_docs(spark, sf_dir, txt, "d"))
     return parsed.select(
         "doc_id",
         F.col("event_idx").cast("long").alias("event_idx"),
@@ -1818,7 +1768,6 @@ def q_set_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     before its statement; the parser must drop it so the event's query is
     exactly the SELECT — if a SET line leaks into any query string the
     value hash flips."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     eid = F.col("event_id")
     txt = F.concat(
         F.lit("# Time: 240101 10:00:00\n"),
@@ -1834,23 +1783,7 @@ def q_set_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "SELECT c FROM t_%s WHERE id=%d;\n", F.col("event_type"), eid
         ),
     )
-    per = ev.select(
-        F.floor(eid / EVENTS_PER_DOC).cast("long").alias("dnum"),
-        eid.alias("event_id"),
-        txt.alias("txt"),
-    )
-    docs = per.groupBy("dnum").agg(
-        F.concat(F.lit("d"), F.col("dnum").cast("string")).alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("event_id", "txt"))),
-                lambda x: x["txt"],
-            ),
-            "",
-        ).alias("text"),
-        F.lit("s0").alias("source"),
-    ).drop("dnum")
-    parsed = parse_slowlog(docs)
+    parsed = parse_slowlog(render_docs(spark, sf_dir, txt, "d"))
     return parsed.select(
         "doc_id",
         F.col("event_idx").cast("long").alias("event_idx"),
@@ -1913,9 +1846,7 @@ def q_user_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     query shape').  Same exact-bounds-plus-boolean gate as the per-sink
     sketch, at class grouping; at scale only the sketch runs and the
     per-class state stays O(1)."""
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-
-    ev = with_fingerprint(ext_parsed_events(spark, sf_dir)).where(~F.col("admin"))
+    ev = ext_parsed_events(spark, sf_dir).where(~F.col("admin"))
     agg = ev.groupBy("fingerprint").agg(
         F.countDistinct("user").alias("exact_users"),
         F.approx_count_distinct("user", rsd=_HLL_RSD).alias("_approx"),
@@ -1994,9 +1925,7 @@ def q_rate_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per (source, class): observed count, the sink's rate limit, and the
     corrected estimate observed * N.  Fails loudly upstream if a sink
     carries MIXED rate limits (slow_rate_limit_check gates that)."""
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-
-    ev = with_fingerprint(ext_parsed_events(spark, sf_dir)).where(~F.col("admin"))
+    ev = ext_parsed_events(spark, sf_dir).where(~F.col("admin"))
     return ev.groupBy("source", "fingerprint").agg(
         F.count(F.lit(1)).alias("observed"),
         F.min("rate_limit").cast("long").alias("rate_limit"),
@@ -2156,8 +2085,6 @@ def q_snapshot_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mysql_log_parser_spark.entry_queries import docs_from_events, encode_tokens
-    from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
     from mysql_log_parser_spark.sources.tokens_table import TokensTable
 
     loc = tempfile.mkdtemp(prefix="mlp_snap_")
@@ -2191,13 +2118,7 @@ def q_snapshot_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fails loudly — tokens_table.assert_log_extends)
     saved_log = t.snapshots()[:_SNAP_SAVED]
     delta = t.read_snapshot_range(_SNAP_SAVED, saved_log=saved_log)  # (saved, current]
-    ev = promote_metrics(with_fingerprint(parse_slowlog(delta)))
-    return ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-        F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
-        F.sum("rows_examined").alias("rex_sum"),
-    )
+    return _class_sums(events(delta))
 
 
 # chunk i holds docs with dnum % 5 == i and becomes snapshot id i+1, so the

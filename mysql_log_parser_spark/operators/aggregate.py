@@ -152,7 +152,12 @@ def _class_aggs(mode: str) -> dict[str, Column]:
     aggs = {"fingerprint": F.first("fingerprint"), **_total()}
     for m in _METRICS:
         aggs |= _stats(m, mode)
-    ex = F.max_by(F.struct("query", "ts"), F.col("query_time"))
+    # the slowest event; Query_time ties (common: logs print 6 decimals) go
+    # to the smallest (doc_id, event_idx), as max_by alone picks any of them
+    qt = F.col("query_time")
+    ex = F.min_by(
+        F.struct("query", "ts"), F.when(qt.isNotNull(), F.struct(-qt, "doc_id", "event_idx"))
+    )
     return aggs | {
         "example_query_time": F.max("query_time"),
         "example_query": ex["query"],
@@ -197,16 +202,16 @@ def class_digest(
     """Per-query-class digest — the QueryClass aggregation
     (class.go:70-121, bin/parser-cli.go:76-84).
 
-    `events` must carry fingerprint/class_id (see with_fingerprint) and the
-    promoted metric columns (see promote_metrics).  Groups by class_id
-    (+ group_extra, e.g. ("source",) for per-sink digests) and emits
-    total_queries plus Query_time / Lock_time / Rows_sent / Rows_examined
-    stats and the argmax example (class.go:100-116).  Catalyst drops the
-    aggregates a caller does not select, so a projection of a few columns
-    pays only for those.  Over a streaming `events` frame this is a stateful
-    streaming aggregate: in update mode each micro-batch emits the running
-    digest of every class it touched (the reference's live class map,
-    bin/parser-cli.go:72-88).
+    `events` are pipeline.events rows (fingerprint/class_id, the promoted
+    metric columns, and doc_id/event_idx for the example's tie-break).
+    Groups by class_id (+ group_extra, e.g. ("source",) for per-sink
+    digests) and emits total_queries plus Query_time / Lock_time /
+    Rows_sent / Rows_examined stats and the argmax example
+    (class.go:100-116).  Catalyst drops the aggregates a caller does not
+    select, so a projection of a few columns pays only for those.  Over a
+    streaming `events` frame this is a stateful streaming aggregate: in
+    update mode each micro-batch emits the running digest of every class it
+    touched (the reference's live class map, bin/parser-cli.go:72-88).
     """
     keys = [*group_extra, "class_id"]
     return events.groupBy(*keys).agg(*_aliased(_class_aggs(mode)))

@@ -20,6 +20,19 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
+# Token-table scans: token docs expand ~20x through the parse (array<int32>
+# -> event rows), so input splits are sized for the EXPANDED working set
+# (one prepared file per split, no shuffle of the raw tokens) and parquet/
+# Arrow batches are kept small on fat array rows (measured deltas in
+# BENCH.md).  All runtime-settable SQL confs, so they apply under
+# spark-submit too.  Pass as build_session(extra_conf=...).
+TOKEN_SCAN_CONF = {
+    "spark.sql.files.maxPartitionBytes": "4m",
+    "spark.sql.files.openCostInBytes": "4m",
+    "spark.sql.parquet.columnarReaderBatchSize": "256",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+}
+
 
 def package_zip() -> str:
     """Zip the package for shipping to executors (the spark-submit

@@ -1,17 +1,19 @@
-"""Distributed scan of ONE raw slow-log file by byte ranges.
+"""Distributed scan of ONE raw slow-log file by byte ranges, into docs.
 
 The reference consumes a log as a single sequential reader (ref:log/parser/
 slow.go:43-71, one goroutine, one file).  At 100 GB a single reader is the
-bottleneck, so this source splits the FILE into byte ranges and parses them
-in parallel with the classic split-log contract:
+bottleneck, so this source cuts the FILE into byte-range docs, which
+pipeline.events then parses in parallel, with the classic split-log
+contract:
 
 - a chunk owns every event whose BOUNDARY LINE starts inside
   [chunk.start, chunk.end);
 - each task reads its range plus `overlap` bytes, snaps forward to the
   first boundary line at/after its start (chunk 0 starts at byte 0
-  unconditionally, so pre-boundary prologue lines are kept), and parses
-  through the first boundary at/after its end — so events spanning the cut
-  are parsed exactly once, by the chunk that owns their boundary line;
+  unconditionally, so pre-boundary prologue lines are kept), and keeps
+  everything through the first boundary at/after its end — so events
+  spanning the cut land in exactly one doc, the chunk that owns their
+  boundary line;
 - the partial line/event before the snap point is DISCARDED — the same
   partial-event-discard semantics the reference applies at StartOffset
   resume (ref:log/parser/slow.go:46-49), applied at every cut.
@@ -33,8 +35,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from mysql_log_parser_spark.operators.parse import parse_slowlog
 
 DEFAULT_BOUNDARY = b"# Time:"
 
@@ -195,18 +195,22 @@ def chunk_specs(
     ]
 
 
-def read_raw_slowlog(
+DOCS_DDL = "doc_id string, text string, source string"
+
+
+def read_raw_docs(
     spark: SparkSession,
     path: str | list[str],
     chunk_bytes: int = 64 << 20,
     overlap: int = 1 << 20,
     boundary: bytes = DEFAULT_BOUNDARY,
     source: str | None = None,
-    admin_filter=None,
     store: PosixLogStore | None = None,
 ) -> DataFrame:
-    """Parallel parse of raw log file(s) -> EVENT_SCHEMA events plus a
-    `base` -> doc_id encoding for absolute offsets (see with_file_offset).
+    """Raw log file(s) -> boundary-snapped docs (doc_id, text, source), one
+    per chunk, ready for pipeline.events.  doc_id encodes the chunk's
+    `base` byte so parsed events can recover absolute offsets (see
+    with_file_offset).
 
     `path` may be one file, a list of files, or a DIRECTORY (every regular
     file inside — the rotated-logs layout); chunking applies per file, so
@@ -216,7 +220,7 @@ def read_raw_slowlog(
     pass a string to tag all events verbatim instead.
 
     One narrow pass: chunk-spec rows -> per-task range read + boundary snap
-    (mapInPandas) -> the standard vectorized parse kernel.  No shuffle.
+    (mapInPandas).  No shuffle.
 
     `store` abstracts the byte source (default: posix).  The driver issues
     only metadata calls (list + one size per file); every task issues one
@@ -254,10 +258,7 @@ def read_raw_slowlog(
         (p, i, s, e) for i, (p, _, s, e) in enumerate(specs)
     ]  # globally unique chunk ids across files
     if not specs:  # every file was empty: a valid, zero-event read
-        empty = spark.createDataFrame(
-            [], "doc_id string, text string, source string"
-        )
-        return parse_slowlog(empty, admin_filter=admin_filter)
+        return spark.createDataFrame([], DOCS_DDL)
     sdf = spark.createDataFrame(
         specs, "path string, chunk_id long, start long, end long"
     ).repartition(len(specs))
@@ -333,8 +334,7 @@ def read_raw_slowlog(
                 rows, columns=["doc_id", "text", "source"]
             )
 
-    docs = sdf.mapInPandas(gen, "doc_id string, text string, source string")
-    return parse_slowlog(docs, admin_filter=admin_filter)
+    return sdf.mapInPandas(gen, DOCS_DDL)
 
 
 def with_file_offset(events: DataFrame) -> DataFrame:

@@ -15,10 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
-from mysql_log_parser_spark.operators.parse import EVENT_SCHEMA, parse_slowlog, promote_metrics
-
-TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
+from mysql_log_parser_spark.pipeline import events
+from mysql_log_parser_spark.sources.tokens_table import TOKENS_DDL
 
 
 def stream_events(
@@ -30,8 +28,7 @@ def stream_events(
     reader = spark.readStream.schema(TOKENS_DDL)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
-    return promote_metrics(with_fingerprint(parse_slowlog(docs)))
+    return events(reader.parquet(input_dir))
 
 
 def windowed_class_counts(

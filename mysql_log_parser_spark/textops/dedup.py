@@ -37,42 +37,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(count > 0, grams).otherwise(F.array()))
 
 
-# Sentinel above any reachable hash value (h1 + i*h2 < 2^48 + 15*2^48 < 2^53).
-_MH_INIT = 1 << 60
-
-
-def minhash_array(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as one array<long> via double hashing:
-    ``mh_i = min over shingles of (h1(s) + i * h2(s))`` with h1/h2 the two
-    48-bit halves of md5(s).
-
-    HOF lambdas re-evaluate every non-lambda-variable subexpression per
-    element (interpreted, never CSE'd), so md5 must NOT appear inside the
-    per-seed zip_with: the md5 digests and the (h1, h2) pairs are
-    materialized by two prior transforms (one md5 eval per shingle), and the
-    fold's lambda only reads struct fields of its own lambda variable.
-    Deterministic, no RNG state, reproducible in any engine with md5.  Null
-    for shingle-less docs (never all-equal sentinel signatures that would
-    band-collide every empty doc with every other).  The Arrow-batched
-    shingle_minhash kernel below is still the preferred hot path; this is
-    the pure-Catalyst variant."""
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    digests = F.transform(shingles, lambda s: F.md5(s))
-    pairs = F.transform(
-        digests,
-        lambda h: F.struct(
-            F.conv(F.substring(h, 1, 12), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(h, 13, 12), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-
-    def step(acc: Column, p: Column) -> Column:
-        return F.zip_with(acc, idx, lambda a, i: F.least(a, p["h1"] + i * p["h2"]))
-
-    init = F.array_repeat(F.lit(_MH_INIT).cast("long"), num_hashes)
-    return F.when(F.size(shingles) > 0, F.aggregate(pairs, init, step))
-
-
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup: groups of byte-identical texts (hash-groupBy)."""
     h = F.md5(F.col(text_col)).alias("content_hash")
@@ -81,17 +45,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         .groupBy("content_hash")
         .agg(F.count(F.lit(1)).alias("dup_count"), F.min(id_col).alias("keep_id"))
         .where(F.col("dup_count") > 1)
-    )
-
-
-def with_minhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    return docs.withColumn(
-        "mh", minhash_array(word_shingles(F.col(text_col), n), num_hashes)
     )
 
 
@@ -105,11 +58,11 @@ def shingle_minhash(
     """Arrow-batched kernel: (id, text) -> (id, sh array<long>, mh array<long>).
 
     `sh` is the set of 48-bit shingle hashes (h1 of md5, distinct), `mh` the
-    double-hashing minhash signature ``mh_i = min(h1 + i*h2)`` — numerically
-    identical to `word_shingles` + `minhash_array`, but one mapInPandas pass
-    instead of interpreted higher-order expressions (measured ~10x on the
-    bench corpus: shingling via Catalyst transform/concat_ws/slice is not
-    codegen'd and dominates).  Null mh for shingle-less docs.
+    double-hashing minhash signature ``mh_i = min(h1 + i*h2)`` over the
+    same shingles as `word_shingles`, in one mapInPandas pass instead of
+    interpreted higher-order expressions (measured ~10x on the bench corpus:
+    shingling via Catalyst transform/concat_ws/slice is not codegen'd and
+    dominates).  Null mh for shingle-less docs.
     """
     id_field = docs.schema[id_col]
     out_schema = StructType(

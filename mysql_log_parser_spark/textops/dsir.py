@@ -44,23 +44,6 @@ def hashed_bucket(col: Column, n_buckets: int, salt: str = "dsir") -> Column:
     return F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(n_buckets))
 
 
-def bucket_counts(
-    words: DataFrame,
-    n_buckets: int,
-    salt: str = "dsir",
-    word_col: str = "word",
-    out_col: str = "cnt",
-) -> DataFrame:
-    """Hashed-unigram histogram: (bucket, cnt) with <= n_buckets rows.
-    Partial-aggregates map-side; the shuffle is bounded by n_buckets keys
-    regardless of corpus size."""
-    return (
-        words.select(hashed_bucket(F.col(word_col), n_buckets, salt).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias(out_col))
-    )
-
-
 def importance_features(
     docs: DataFrame,
     target_filter: Column,

@@ -26,11 +26,6 @@ def stopword_hits(words: Column, lang: str) -> Column:
     return F.size(F.array_intersect(F.array_distinct(words), sw))
 
 
-def language_scores(text: Column) -> list[Column]:
-    w = words_of(text)
-    return [stopword_hits(w, lang).alias(f"score_{lang}") for lang in STOPWORDS]
-
-
 def language_id(text: Column) -> Column:
     """argmax language by distinct-stopword hits; 'und' (undetermined) when
     no stopword matches at all.  Ties break by language-code order."""

@@ -8,7 +8,7 @@ import pytest
 
 from mysql_log_parser_spark import synth
 from mysql_log_parser_spark.operators.checkpoint import CheckpointedRunner
-from mysql_log_parser_spark.pipeline import SlowLogPipeline
+from mysql_log_parser_spark.pipeline import events
 
 
 @pytest.fixture()
@@ -24,16 +24,15 @@ def chunked_input(tmp_path):
 
 def test_incremental_resume(spark, chunked_input, tmp_path):
     out = str(tmp_path / "out")
-    pipe = SlowLogPipeline(spark)
     runner = CheckpointedRunner(spark, out)
 
     # first run "crashes" after 2 chunks
-    recs = runner.run_incremental(chunked_input, pipe.events, max_chunks=2)
+    recs = runner.run_incremental(chunked_input, events, max_chunks=2)
     assert len(recs) == 2
     assert len(runner.committed_chunks()) == 2
 
     # resume: only the remaining chunks are processed
-    recs2 = CheckpointedRunner(spark, out).run_incremental(chunked_input, pipe.events)
+    recs2 = CheckpointedRunner(spark, out).run_incremental(chunked_input, events)
     assert len(recs2) == 2
     assert {r["chunk"] for r in recs} | {r["chunk"] for r in recs2} == {
         f"chunk{i}.parquet" for i in range(4)
@@ -41,11 +40,11 @@ def test_incremental_resume(spark, chunked_input, tmp_path):
 
     # resumed output == from-scratch output
     resumed = runner.events().count()
-    scratch = pipe.events(spark.read.parquet(*(f"{chunked_input}/chunk{i}.parquet" for i in range(4)))).count()
+    scratch = events(spark.read.parquet(*(f"{chunked_input}/chunk{i}.parquet" for i in range(4)))).count()
     assert resumed == scratch == 4 * 6 * 10
 
     # third run: nothing to do
-    assert CheckpointedRunner(spark, out).run_incremental(chunked_input, pipe.events) == []
+    assert CheckpointedRunner(spark, out).run_incremental(chunked_input, events) == []
 
     # lineage present per chunk
     rec = runner.committed_chunks()["chunk0.parquet"]
@@ -60,15 +59,14 @@ def test_idempotent_reprocess_of_uncommitted(spark, chunked_input, tmp_path):
     """A chunk whose output was written but not committed is re-processed
     and overwritten without duplication (the partial-event-discard analogue)."""
     out = str(tmp_path / "out")
-    pipe = SlowLogPipeline(spark)
     runner = CheckpointedRunner(spark, out)
-    runner.run_incremental(chunked_input, pipe.events, max_chunks=1)
+    runner.run_incremental(chunked_input, events, max_chunks=1)
     # simulate crash-after-write-before-commit for chunk1
     docs = spark.read.parquet(os.path.join(chunked_input, "chunk1.parquet"))
-    pipe.events(docs).limit(3).write.mode("overwrite").parquet(
+    events(docs).limit(3).write.mode("overwrite").parquet(
         os.path.join(out, "data", "chunk=chunk1.parquet")
     )
-    runner.run_incremental(chunked_input, pipe.events)
+    runner.run_incremental(chunked_input, events)
     assert runner.events().count() == 4 * 6 * 10  # no dupes, no loss
 
 
@@ -76,16 +74,15 @@ def test_late_arriving_chunk(spark, chunked_input, tmp_path):
     """Resume across the chunk boundary when NEW input arrives after a full
     run: only the new chunk is processed, committed output is untouched."""
     out = str(tmp_path / "out")
-    pipe = SlowLogPipeline(spark)
     runner = CheckpointedRunner(spark, out)
-    runner.run_incremental(chunked_input, pipe.events)
+    runner.run_incremental(chunked_input, events)
     assert len(runner.committed_chunks()) == 4
 
     synth.generate_parquet(
         os.path.join(chunked_input, "chunk9.parquet"),
         n_docs=6, events_per_doc=10, seed=999,
     )
-    recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, pipe.events)
+    recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, events)
     assert [r["chunk"] for r in recs] == ["chunk9.parquet"]
     assert runner.events().count() == 5 * 6 * 10
 
@@ -99,12 +96,11 @@ def test_failed_chunk_propagates_others_commit(spark, chunked_input, tmp_path):
     beside it still commit valid records, and a restart processes only
     the failed chunk."""
     out = str(tmp_path / "out")
-    pipe = SlowLogPipeline(spark)
 
     def fail_chunk2(docs):
         if any(f.endswith("chunk2.parquet") for f in docs.inputFiles()):
             raise _ChunkFailure("chunk2")
-        return pipe.events(docs)
+        return events(docs)
 
     runner = CheckpointedRunner(spark, out)
     with pytest.raises(_ChunkFailure):
@@ -116,7 +112,7 @@ def test_failed_chunk_propagates_others_commit(spark, chunked_input, tmp_path):
         assert sum(rec["by_source"].values()) == 60
         assert sum(rec["by_partition_file"].values()) == 60
 
-    recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, pipe.events)
+    recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, events)
     assert [r["chunk"] for r in recs] == ["chunk2.parquet"]
     assert runner.events().count() == 4 * 6 * 10
 
@@ -125,14 +121,13 @@ def test_chunks_run_concurrently_in_pending_order(spark, chunked_input, tmp_path
     """Pending chunks are processed from more than one driver thread, each
     inheriting the caller's local properties, and the records come back in
     pending order with the same lineage as a one-chunk-at-a-time run."""
-    pipe = SlowLogPipeline(spark)
     sc = spark.sparkContext
     threads, props = set(), set()
 
     def process(docs):
         threads.add(threading.get_ident())
         props.add(sc.getLocalProperty("mlp.test.caller"))
-        return pipe.events(docs)
+        return events(docs)
 
     sc.setLocalProperty("mlp.test.caller", "run_incremental")
     try:
@@ -146,7 +141,7 @@ def test_chunks_run_concurrently_in_pending_order(spark, chunked_input, tmp_path
 
     one_by_one = []
     seq = CheckpointedRunner(spark, str(tmp_path / "b"))
-    while step := seq.run_incremental(chunked_input, pipe.events, max_chunks=1):
+    while step := seq.run_incremental(chunked_input, events, max_chunks=1):
         one_by_one += step
     lineage = ("chunk", "rows_in", "events_out", "by_source")
     assert [r["chunk"] for r in recs] == [f"chunk{i}.parquet" for i in range(4)]

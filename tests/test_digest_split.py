@@ -17,7 +17,7 @@ from mysql_log_parser_spark.operators.aggregate import (
     rollup_digest,
     split_rollup_digest,
 )
-from mysql_log_parser_spark.pipeline import SlowLogPipeline
+from mysql_log_parser_spark import pipeline
 
 # () -> (rate_type, rate_limit) columns per event; the synth corpus has none
 RATE_VARIANTS = {
@@ -35,7 +35,7 @@ RATE_VARIANTS = {
 def events(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("split") / "tokens.parquet")
     synth.generate_parquet(p, n_docs=12, events_per_doc=25, seed=3)
-    return SlowLogPipeline(spark).events(spark.read.parquet(p)).persist()
+    return pipeline.events(spark.read.parquet(p)).persist()
 
 
 def _variant(events, rate):

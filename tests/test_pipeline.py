@@ -12,7 +12,7 @@ from mysql_log_parser_spark import synth
 from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
 from mysql_log_parser_spark.operators.enrich import build_dims, enrich_events
 from mysql_log_parser_spark.operators.route import read_sink, route_partitioned, sink_counts
-from mysql_log_parser_spark.pipeline import SlowLogPipeline
+from mysql_log_parser_spark.pipeline import events
 
 
 @pytest.fixture(scope="module")
@@ -31,8 +31,7 @@ def test_synth_deterministic(tmp_path):
 
 
 def test_pipeline_events(spark, synth_docs):
-    pipe = SlowLogPipeline(spark)
-    ev = pipe.events(synth_docs)
+    ev = events(synth_docs)
     n = ev.count()
     assert n == 40 * 25  # every synth event parses to exactly one row
     # every event has a class id and promoted Query_time
@@ -45,8 +44,8 @@ def test_pipeline_events(spark, synth_docs):
 
 
 def test_admin_filter_pipeline(spark, synth_docs):
-    base = SlowLogPipeline(spark).events(synth_docs)
-    filt = SlowLogPipeline(spark, admin_filter=("Ping",)).events(synth_docs)
+    base = events(synth_docs)
+    filt = events(synth_docs, ("Ping",))
     n_admin = base.where("admin").count()
     assert n_admin > 0
     assert filt.where("admin").count() == 0
@@ -54,8 +53,7 @@ def test_admin_filter_pipeline(spark, synth_docs):
 
 
 def test_routing_parity(spark, synth_docs, tmp_path):
-    pipe = SlowLogPipeline(spark)
-    ev = pipe.events(synth_docs).persist()
+    ev = events(synth_docs).persist()
     out = str(tmp_path / "routed")
     route_partitioned(ev, out)
 
@@ -81,15 +79,14 @@ def test_routing_parity(spark, synth_docs, tmp_path):
 
 def test_partition_pruning(spark, synth_docs, tmp_path):
     out = str(tmp_path / "routed2")
-    route_partitioned(SlowLogPipeline(spark).events(synth_docs), out)
+    route_partitioned(events(synth_docs), out)
     plan = read_sink(spark, out, "src1")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "src1" in plan
 
 
 def test_enrich_broadcast(spark, synth_docs):
-    pipe = SlowLogPipeline(spark)
     dims = build_dims(spark)
-    ev = enrich_events(pipe.events(synth_docs), **dims)
+    ev = enrich_events(events(synth_docs), **dims)
     # known host gets attributes; synth 'web-42' host is not in dims -> nulls
     row = ev.where(F.col("host") == "localhost").select("datacenter").first()
     assert row.datacenter is not None
@@ -100,7 +97,7 @@ def test_enrich_broadcast(spark, synth_docs):
 
 
 def test_digests(spark, synth_docs):
-    ev = SlowLogPipeline(spark).events(synth_docs).persist()
+    ev = events(synth_docs).persist()
     cd = class_digest(ev, mode="exact")
     gd = global_digest(ev, mode="exact").first()
     total = ev.count()
@@ -115,16 +112,39 @@ def test_digests(spark, synth_docs):
     ev.unpersist()
 
 
+@pytest.mark.parametrize("mode", ["exact", "sketch"])
+def test_example_ties_are_layout_independent(spark, mode):
+    """Every event of the class has the same Query_time: the example is the
+    smallest (doc_id, event_idx), whatever order the partitions hold them in."""
+    def doc(i):
+        return "".join(
+            f"# Time: 240101 10:00:{j:02d}\n# User@Host: u[u] @ h []\n"
+            "# Query_time: 1.500000  Lock_time: 0.000000 Rows_sent: 1  Rows_examined: 1\n"
+            f"SELECT c FROM t WHERE id={10 * i + j};\n"
+            for j in range(3)
+        )
+
+    rows = [(f"d{i}", doc(i), "s0") for i in range(8)]
+    got = []
+    for layout in (rows, rows[::-1]):
+        docs = spark.sparkContext.parallelize(layout, 4).toDF(
+            "doc_id string, text string, source string"
+        )
+        (r,) = class_digest(events(docs), mode=mode).collect()
+        got.append((r.example_query, r.example_ts))
+    assert got[0] == got[1] == ("SELECT c FROM t WHERE id=0", "2024-01-01 10:00:00")
+
+
 def test_route_loop_heterogeneous(spark, tmp_path):
     """Per-sink loop writes (heterogeneous-sink path) must route every event
     exactly once, matching the partitioned single-pass strategy."""
     from mysql_log_parser_spark import synth
     from mysql_log_parser_spark.operators.route import route_loop, route_partitioned
-    from mysql_log_parser_spark.pipeline import SlowLogPipeline
+    from mysql_log_parser_spark.pipeline import events
 
     p = str(tmp_path / "tokens.parquet")
     synth.generate_parquet(p, n_docs=8, events_per_doc=10, seed=17)
-    ev = SlowLogPipeline(spark).events(spark.read.parquet(p))
+    ev = events(spark.read.parquet(p))
 
     loop_base = str(tmp_path / "loop")
     part_base = str(tmp_path / "part")
@@ -174,8 +194,7 @@ def test_merge_digest_law(spark, synth_docs):
         partial_class_digest,
     )
 
-    pipe = SlowLogPipeline(spark)
-    ev = pipe.events(synth_docs)
+    ev = events(synth_docs)
     direct = {
         r["class_id"]: r.asDict()
         for r in merge_class_digests(partial_class_digest(ev)).collect()
@@ -208,7 +227,7 @@ def test_compact_routed(spark, synth_docs, tmp_path):
     partition-prune."""
     from mysql_log_parser_spark.operators.route import compact_routed
 
-    ev = SlowLogPipeline(spark).events(synth_docs)
+    ev = events(synth_docs)
     src = str(tmp_path / "routed_small")
     # fragment: repartition high before the partitioned write
     route_partitioned(ev.repartition(32), src)
@@ -241,7 +260,7 @@ def test_observed_metrics_ride_the_action(spark, synth_docs):
     after a single action (no second scan scheduled)."""
     from mysql_log_parser_spark.operators.metrics import observe_events
 
-    ev = SlowLogPipeline(spark).events(synth_docs)
+    ev = events(synth_docs)
     observed, obs = observe_events(ev)
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
@@ -264,7 +283,7 @@ def test_upsert_routed_touches_only_affected_partitions(spark, synth_docs, tmp_p
 
     from mysql_log_parser_spark.operators.route import upsert_routed
 
-    ev = SlowLogPipeline(spark).events(synth_docs)
+    ev = events(synth_docs)
     base = str(tmp_path / "routed")
     route_partitioned(ev, base)
 
@@ -409,7 +428,7 @@ def test_tokens_table_json_and_orc_formats(spark, synth_docs, tmp_path):
     synth_docs.write.orc(oc)
 
     def digest(path, fmt):
-        ev = SlowLogPipeline(spark).events(TokensTable(spark, path).read(fmt=fmt))
+        ev = events(TokensTable(spark, path).read(fmt=fmt))
         return sorted(
             (r["class_id"], r["total_queries"], r["query_time_sum"])
             for r in class_digest(ev, mode="sketch")

@@ -15,7 +15,8 @@ from mysql_log_parser_spark.operators.aggregate import (
     split_rollup_digest,
 )
 from mysql_log_parser_spark.operators.enrich import build_dims, enrich_events
-from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
+from mysql_log_parser_spark.operators.parse import parse_slowlog
+from mysql_log_parser_spark.pipeline import events
 from mysql_log_parser_spark.sources.tokens_table import TokensTable
 
 
@@ -31,7 +32,7 @@ def tokens_dir(tmp_path_factory):
 
 
 def test_pipeline_has_no_rowwise_python(spark, tokens_dir):
-    ev = promote_metrics(with_fingerprint(parse_slowlog(spark.read.parquet(tokens_dir))))
+    ev = events(spark.read.parquet(tokens_dir))
     plan = _plan(class_digest(ev, mode="sketch"))
     assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF in the hot path"
     assert ("MapInArrow" in plan) or ("MapInPandas" in plan), "parse kernel missing"
@@ -45,7 +46,7 @@ def test_fingerprint_is_jvm_side(spark, tokens_dir):
 
 
 def test_enrich_is_broadcast_join(spark, tokens_dir):
-    ev = promote_metrics(with_fingerprint(parse_slowlog(spark.read.parquet(tokens_dir))))
+    ev = events(spark.read.parquet(tokens_dir))
     dims = build_dims(spark)
     enriched = enrich_events(
         ev, dims["dim_host"], dims["dim_db"], dims["dim_user"]
@@ -72,7 +73,7 @@ def test_scan_pushes_filters(spark, tokens_dir):
 
 
 def test_class_agg_is_partial_final(spark, tokens_dir):
-    ev = promote_metrics(with_fingerprint(parse_slowlog(spark.read.parquet(tokens_dir))))
+    ev = events(spark.read.parquet(tokens_dir))
     plan = _plan(ev.groupBy("class_id").agg(F.count(F.lit(1)).alias("n")))
     # partial (map-side) aggregation must appear before the exchange
     assert plan.count("HashAggregate") >= 2
@@ -82,7 +83,7 @@ def test_class_agg_is_partial_final(spark, tokens_dir):
 def test_digest_job_parses_once(spark, tokens_dir):
     """digest_job's shape: the class+global rollup holds the only parse, and
     the two digests projected from its materialized result re-run none."""
-    ev = promote_metrics(with_fingerprint(parse_slowlog(spark.read.parquet(tokens_dir))))
+    ev = events(spark.read.parquet(tokens_dir))
     rollup = rollup_digest(ev, mode="sketch")
     assert _plan(rollup).count("MapInArrow") == 1
     for out in split_rollup_digest(rollup.localCheckpoint()):

@@ -117,7 +117,7 @@ def test_rawlog_split_invariant(spark, tmp_path_factory, minutes, chunk_bytes):
     from pyspark.sql import functions as F
 
     from mysql_log_parser_spark.operators.parse import parse_slowlog
-    from mysql_log_parser_spark.sources.rawlog import read_raw_slowlog, with_file_offset
+    from mysql_log_parser_spark.sources.rawlog import read_raw_docs, with_file_offset
 
     parts = []
     for i, mm in enumerate(minutes):
@@ -137,7 +137,7 @@ def test_rawlog_split_invariant(spark, tmp_path_factory, minutes, chunk_bytes):
         )
     ).withColumn("file_offset", F.col("offset") - (F.col("offset") != 0).cast("long"))
     chunked = with_file_offset(
-        read_raw_slowlog(spark, str(p), chunk_bytes=chunk_bytes, overlap=8192)
+        parse_slowlog(read_raw_docs(spark, str(p), chunk_bytes=chunk_bytes, overlap=8192))
     )
     key = lambda df: sorted(
         (r[0], r[1], r[2]) for r in df.select("file_offset", "query", "ts").collect()

@@ -6,7 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark.operators.parse import parse_slowlog
-from mysql_log_parser_spark.sources.rawlog import read_raw_slowlog, with_file_offset
+from mysql_log_parser_spark.sources.rawlog import read_raw_docs, with_file_offset
+
+
+def _parse_raw(spark, path, admin_filter=None, **kw):
+    return parse_slowlog(read_raw_docs(spark, path, **kw), admin_filter)
 
 
 def _make_log(tmp_path, n_events=40):
@@ -56,7 +60,7 @@ def test_chunked_equals_whole(spark, tmp_path, chunk_bytes):
         "file_offset", F.col("offset") - (F.col("offset") != 0).cast("long")
     )
     chunked = with_file_offset(
-        read_raw_slowlog(spark, path, chunk_bytes=chunk_bytes, overlap=4096)
+        _parse_raw(spark, path, chunk_bytes=chunk_bytes, overlap=4096)
     )
     w, c = _key_set(whole), _key_set(chunked)
     assert len(w) > 30
@@ -66,13 +70,12 @@ def test_chunked_equals_whole(spark, tmp_path, chunk_bytes):
 def test_overlap_too_small_fails_loudly(spark, tmp_path):
     path, _ = _make_log(tmp_path)
     with pytest.raises(Exception, match="overlap"):
-        read_raw_slowlog(spark, path, chunk_bytes=64, overlap=16).count()
+        _parse_raw(spark, path, chunk_bytes=64, overlap=16).count()
 
 
 def test_admin_filter_applies(spark, tmp_path):
     path, _ = _make_log(tmp_path)
-    ev = read_raw_slowlog(spark, path, chunk_bytes=400, overlap=4096,
-                          admin_filter={"Ping"})
+    ev = _parse_raw(spark, path, chunk_bytes=400, overlap=4096, admin_filter={"Ping"})
     assert ev.where(F.col("admin")).count() == 0
 
 
@@ -95,7 +98,7 @@ def test_prologue_events_without_boundary_kept(spark, tmp_path):
         spark.createDataFrame([("w", text, "")], "doc_id string, text string, source string")
     )
     for chunk_bytes in (40, 1 << 20):
-        ev = read_raw_slowlog(spark, str(p), chunk_bytes=chunk_bytes, overlap=4096)
+        ev = _parse_raw(spark, str(p), chunk_bytes=chunk_bytes, overlap=4096)
         got = sorted(r["query"] for r in ev.select("query").collect())
         want = sorted(r["query"] for r in whole.select("query").collect())
         assert got == want and len(got) == 2, (chunk_bytes, got)
@@ -124,7 +127,7 @@ def test_directory_of_rotated_logs(spark, tmp_path):
     for f in range(3):
         _make_log(d, n_events=10)  # writes big.log; rename per file
         (d / "big.log").rename(d / f"slow.{f}.log")
-    ev = read_raw_slowlog(spark, str(d), chunk_bytes=300, overlap=4096, source=None)
+    ev = _parse_raw(spark, str(d), chunk_bytes=300, overlap=4096, source=None)
     per = {r["source"]: r["cnt"] for r in
            ev.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
     assert set(per) == {"slow.0.log", "slow.1.log", "slow.2.log"}
@@ -167,7 +170,7 @@ def test_fake_remote_store_range_reads(spark, tmp_path):
     )
     want = sorted(r["query"] for r in whole.select("query").collect())
     for chunk_bytes in (200, 1 << 20):
-        ev = read_raw_slowlog(
+        ev = _parse_raw(
             spark, "bucket", chunk_bytes=chunk_bytes, overlap=4096, store=store
         )
         per = {
@@ -184,7 +187,6 @@ def test_gzipped_rotated_logs(spark, tmp_path):
     file's basename as source."""
     import gzip
 
-    from mysql_log_parser_spark.sources.rawlog import read_raw_slowlog
 
     def render(lo, hi):
         return "".join(
@@ -200,7 +202,7 @@ def test_gzipped_rotated_logs(spark, tmp_path):
     (d / "slow.log").write_text(render(0, 40))
     (d / "slow.log.1.gz").write_bytes(gzip.compress(render(40, 70).encode()))
 
-    ev = read_raw_slowlog(spark, str(d), chunk_bytes=1 << 10)
+    ev = _parse_raw(spark, str(d), chunk_bytes=1 << 10)
     rows = ev.select("source", "query").collect()
     by_src = {}
     for r in rows:
@@ -224,7 +226,6 @@ def test_gzip_member_streams_into_bounded_subdocs(spark, tmp_path):
     from mysql_log_parser_spark.sources.rawlog import (
         _gz_stream_docs,
         PosixLogStore,
-        read_raw_slowlog,
         with_file_offset,
     )
 
@@ -255,7 +256,7 @@ def test_gzip_member_streams_into_bounded_subdocs(spark, tmp_path):
 
     # parsed events == whole-text parse, offsets are decompressed-stream honest
     ev = with_file_offset(
-        read_raw_slowlog(spark, str(d), chunk_bytes=1 << 10, overlap=4096)
+        _parse_raw(spark, str(d), chunk_bytes=1 << 10, overlap=4096)
     )
     whole = parse_slowlog(
         spark.createDataFrame(
@@ -289,7 +290,6 @@ def test_empty_and_all_empty_log_files(spark, tmp_path):
     read, not a crash."""
     import gzip
 
-    from mysql_log_parser_spark.sources.rawlog import read_raw_slowlog
 
     d = tmp_path / "logs"
     d.mkdir()
@@ -300,12 +300,12 @@ def test_empty_and_all_empty_log_files(spark, tmp_path):
     )
     (d / "slow.log.1.gz").write_bytes(b"")
     (d / "slow.log.2").write_text("")
-    assert read_raw_slowlog(spark, str(d)).count() == 1
+    assert _parse_raw(spark, str(d)).count() == 1
 
     e = tmp_path / "empty"
     e.mkdir()
     (e / "a.log").write_text("")
-    assert read_raw_slowlog(spark, str(e)).count() == 0
+    assert _parse_raw(spark, str(e)).count() == 0
 
 
 def test_rawlog_scanner_matches_direct_parse_on_reference_fixtures(spark, tmp_path):
@@ -334,7 +334,7 @@ def test_rawlog_scanner_matches_direct_parse_on_reference_fixtures(spark, tmp_pa
         )
         # slow015 carries a single ~80 KB event: overlap must exceed the
         # largest event (the loud-failure contract tested elsewhere)
-        chunked = read_raw_slowlog(spark, str(p), chunk_bytes=256, overlap=1 << 17)
+        chunked = _parse_raw(spark, str(p), chunk_bytes=256, overlap=1 << 17)
 
         cols = ["query", "user", "host", "db", "ts", "admin"]
         d = sorted(tuple(r) for r in direct.select(*cols).collect())

@@ -7,14 +7,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark import synth
-from mysql_log_parser_spark.pipeline import SlowLogPipeline
+from mysql_log_parser_spark.pipeline import events
 from mysql_log_parser_spark.report import digest_report, top_classes
 
 
 def test_digest_report(spark, tmp_path):
     p = str(tmp_path / "tokens.parquet")
     synth.generate_parquet(p, n_docs=10, events_per_doc=20, seed=3)
-    ev = SlowLogPipeline(spark).events(spark.read.parquet(p))
+    ev = events(spark.read.parquet(p))
     rep = digest_report(ev, elapsed_sec=1.5)
     assert rep.startswith("Events: 200, time: 1.500000 sec, rate: 133.333333")
     assert "1.00 pct query time" in rep
@@ -29,7 +29,7 @@ def test_digest_report_rate_corrected(spark, tmp_path):
     pt-query-digest observed*N correction, globally and per class."""
     p = str(tmp_path / "tokens.parquet")
     synth.generate_parquet(p, n_docs=10, events_per_doc=20, seed=3)
-    ev = SlowLogPipeline(spark).events(spark.read.parquet(p)).withColumn(
+    ev = events(spark.read.parquet(p)).withColumn(
         "rate_limit", F.lit(100)
     )
     rep = digest_report(ev)
@@ -111,7 +111,7 @@ def test_digest_job_event_free_input(spark, tmp_path, mode, incremental):
         ["--input", str(ind), "--output", out, "--mode", mode]
         + (["--incremental"] if incremental else [])
     )
-    ev = SlowLogPipeline(spark).events(spark.read.parquet(str(ind)))
+    ev = events(spark.read.parquet(str(ind)))
     assert ev.count() == 0
     assert spark.read.parquet(f"{out}/class_digest").count() == 0
     gd = spark.read.parquet(f"{out}/global_digest")
@@ -218,3 +218,55 @@ def test_digest_job_raw_log_mode(spark, tmp_path):
     # routed layout carries the file name as the source tag, not NULL
     routed = spark.read.parquet(f"{out}/routed")
     assert routed.where(F.col("source") == "slow.log").count() == 30
+
+
+def test_digest_job_input_modes_agree(spark, tmp_path):
+    """One corpus with Ping admin events, run as a tokens dir, as an
+    --incremental chunk dir and as a --raw-log file, each with
+    --filter-admin Ping: all three write the same class and global digests.
+    The raw log lists the docs in (doc_id, event_idx) order, so example
+    ties resolve to the same event in every mode."""
+    import pyarrow.parquet as pq
+
+    from mysql_log_parser_spark import tokenizer
+
+    ind = tmp_path / "in"
+    ind.mkdir()
+    for c in range(2):
+        synth.generate_parquet(
+            str(ind / f"c{c}.parquet"), n_docs=12, events_per_doc=15, seed=31 + c
+        )
+    docs = pq.read_table(str(ind)).to_pylist()
+    assert any("administrator command: Ping" in tokenizer.decode(d["tokens"]) for d in docs)
+    log = tmp_path / "slow.log"
+    log.write_text(
+        "".join(tokenizer.decode(d["tokens"]) for d in sorted(docs, key=lambda d: d["doc_id"]))
+    )
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import digest_job
+
+    digests = []
+    for name, inp, flags in [
+        ("tokens", ind, []),
+        ("incremental", ind, ["--incremental"]),
+        ("raw", log, ["--raw-log"]),
+    ]:
+        out = str(tmp_path / f"out_{name}")
+        digest_job.main(
+            ["--input", str(inp), "--output", out, "--filter-admin", "Ping",
+             "--mode", "exact", *flags]
+        )
+        digests.append(
+            tuple(
+                sorted(spark.read.parquet(f"{out}/{d}").collect(), key=str)
+                for d in ("class_digest", "global_digest")
+            )
+        )
+    (gd,) = digests[0][1]
+    assert gd.total_queries == 2 * 12 * 15 - sum(
+        tokenizer.decode(d["tokens"]).count("administrator command: Ping") for d in docs
+    )
+    assert "ping" not in {r.fingerprint for r in digests[0][0]}
+    assert digests[1] == digests[0]
+    assert digests[2] == digests[0]

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark import synth
-from mysql_log_parser_spark.pipeline import SlowLogPipeline
+from mysql_log_parser_spark.pipeline import events
 from mysql_log_parser_spark.streaming.pipeline import start_routed_sink, stream_events
 
 
@@ -28,7 +28,7 @@ def test_stream_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(out)
-    batch = SlowLogPipeline(spark).events(spark.read.parquet(str(ind)))
+    batch = events(spark.read.parquet(str(ind)))
     assert streamed.count() == batch.count() == 3 * 5 * 8
 
     s = {(r.source, r.class_id): r.cnt for r in
@@ -104,7 +104,7 @@ def test_stateful_running_digest(spark, tmp_path):
             final[r.class_id] = r
     assert sum(r.total_queries for r in final.values()) == 2 * 4 * 6
 
-    batch = SlowLogPipeline(spark).events(spark.read.parquet(str(ind)))
+    batch = events(spark.read.parquet(str(ind)))
     exact = ["total_queries", "query_time_sum", "query_time_min", "query_time_max"]
     want = {r.class_id: r for r in class_digest(batch, mode="sketch").collect()}
     assert {k: [r[c] for c in exact] for k, r in final.items()} == {
