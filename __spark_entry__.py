@@ -49,8 +49,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # missing" #1 — the 13-entry tail the r4 cap cut), and (c) entries whose
 # implementation changed after their r04 gate must lead; the cap's
 # remainder is filled with the OLDEST (r03-latest) rows so every entry's
-# driver row stays as fresh as 112 entries / 50-cap allows.
+# driver row stays as fresh as 110 entries / 50-cap allows.
 _VERIFY_FIRST = [
+    # gates whose implementation now calls the production class_digest /
+    # route_partitioned + sink_counts (gate-freshness rotation)
+    "slow_example_select",
+    "slow_example_ts",
+    "slow_route_counts",
+    "stream_route_counts",
+    "stream_window_agg",
+    "stream_dedup",
+    "slow_bucketed_join",
     # (a) new this round, never driver-gated
     "ann_ivfpq_residual",
     "ann_pq_recall_residual",
@@ -60,9 +69,7 @@ _VERIFY_FIRST = [
     "dedup_exact_tokens",
     # (b) r02-latest rows — the full 13 fit this round (VERDICT r4 item 3)
     "slow_global_sketch",
-    "stream_route_counts",
     "stream_stateful_digest",
-    "stream_window_agg",
     "text_quality",
     "lang_id",
     "token_stats",
@@ -102,8 +109,6 @@ _VERIFY_FIRST = [
     "slow_user_agg",
     "slow_rate_limit_check",
     "slow_admin_filter",
-    "slow_digest_merge",
-    "slow_bucketed_join",
     "multimodal_resize",
     "slow_window_topk",
     "slow_db_capture",

@@ -195,13 +195,19 @@ FROM e
 
 
 def q_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fan-out parity surface: per-sink routed-row and distinct-class counts."""
-    ev = parsed_events(spark, sf_dir)
-    return ev.groupBy("source").agg(
-        F.count(F.lit(1)).alias("routed_rows"),
-        F.countDistinct("class_id").alias("distinct_classes"),
-        F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
-    )
+    """Fan-out parity surface: the events routed to per-source sinks
+    (route_partitioned), then per-sink routed-row and distinct-class counts
+    over what was written (sink_counts)."""
+    import atexit
+    import shutil
+    import tempfile
+
+    from mysql_log_parser_spark.operators.route import route_partitioned, sink_counts
+
+    d = tempfile.mkdtemp(prefix="mlp_routed_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    route_partitioned(parsed_events(spark, sf_dir), d)
+    return sink_counts(spark, d)
 
 
 O_ROUTE_COUNTS = _ORACLE_EVENTS_CTE + """

@@ -29,7 +29,6 @@ from mysql_log_parser_spark.entry_queries import (
 )
 from mysql_log_parser_spark.operators.aggregate import (
     class_digest,
-    example_ts,
     global_digest,
     stats_long,
 )
@@ -177,36 +176,29 @@ FROM e GROUP BY 1
 
 # -- A9: example selection (class.go:100-116) ---------------------------------
 
+def _example_columns() -> list[F.Column]:
+    """A class_digest's example as the gates' columns: the winner's event
+    id (from its query text), Query_time as a double, and reformatted Ts."""
+    return [
+        F.regexp_extract("example_query", "id=(\\d+)", 1).cast("long").alias("example_id"),
+        F.col("example_query_time").cast("double").alias("example_qt"),
+        "example_ts",
+    ]
+
+
 def q_example_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-class example = argmax query text by Query_time (tie-broken by
-    event id for determinism under parallel aggregation) — max_by over a
-    struct ordering, no window shuffle."""
-    ev = parsed_events(spark, sf_dir).withColumn(
-        "eid", F.regexp_extract("query", "id=(\\d+)", 1).cast("long")
-    )
-    qt = F.col("query_time").cast("double")
-    winner = F.max_by(
-        F.struct(
-            F.col("query").alias("q"), F.col("eid").alias("i"), qt.alias("t"),
-            F.col("ts").alias("ts"),
-        ),
-        F.struct(qt, F.col("eid")),
-    )
-    return ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-        winner.getField("q").alias("example_query"),
-        winner.getField("i").alias("example_id"),
-        winner.getField("t").alias("example_qt"),
-        # parse-or-blank pinned end-to-end via the production reformat
-        example_ts(winner.getField("ts")).alias("example_ts"),
+    """Per-class example = the class_digest example: the query text with the
+    largest Query_time, ties going to the smallest (doc_id, event_idx) so the
+    winner does not depend on how the events are partitioned."""
+    return class_digest(parsed_events(spark, sf_dir), "exact").select(
+        "class_id", "fingerprint", "total_queries", "example_query", *_example_columns()
     )
 
 
 O_EXAMPLE_SELECT = _ORACLE_EVENTS_CTE + """
 , r AS (
   SELECT fingerprint, query, event_id, qt,
-         row_number() OVER (PARTITION BY fingerprint ORDER BY qt DESC, event_id DESC) AS rn,
+         row_number() OVER (PARTITION BY fingerprint ORDER BY qt DESC, doc_id, event_idx) AS rn,
          count(*) OVER (PARTITION BY fingerprint) AS total_queries
   FROM e
 )
@@ -224,36 +216,28 @@ FROM r WHERE rn = 1
 
 def q_example_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """example_ts over the EXT corpus, where the Time line VARIES per event
-    (minute = event_id % 60): the argmax winner's raw '#tTime:' text is
+    (minute = event_id % 60): the class_digest winner's raw '# Time:' text is
     reparsed and reformatted (class.go:106-110), so the hash covers both the
     winner selection of ts and the yyMMdd->ISO reformat.  Admin events are
     excluded so the statement fingerprints match the oracle's derivation."""
     ev = ext_parsed_events(spark, sf_dir).where(~F.col("admin"))
-    ev = ev.withColumn("eid", F.regexp_extract("query", "id=(\\d+)", 1).cast("long"))
-    qt = F.col("query_time").cast("double")
-    winner = F.max_by(
-        F.struct(F.col("eid").alias("i"), qt.alias("t"), F.col("ts").alias("ts")),
-        F.struct(qt, F.col("eid")),
-    )
-    return ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("total_queries"),
-        winner.getField("i").alias("example_id"),
-        winner.getField("t").alias("example_qt"),
-        example_ts(winner.getField("ts")).alias("example_ts"),
+    return class_digest(ev, "exact").select(
+        "class_id", "fingerprint", "total_queries", *_example_columns()
     )
 
 
 O_EXAMPLE_TS = f"""
 WITH e AS (
   SELECT CAST(event_id AS BIGINT) AS event_id,
+         'x' || CAST(event_id // {EVENTS_PER_DOC} AS VARCHAR) AS doc_id,
+         CAST(event_id % {EVENTS_PER_DOC} AS BIGINT) AS event_idx,
          CAST(event_id % 60 AS BIGINT) AS mm,
          CAST(round(value*64)/64 AS DOUBLE) AS qt,
          'select c from t_' || event_type || ' where id=?' AS fingerprint
   FROM events WHERE event_id % 17 != 0
 ), r AS (
   SELECT fingerprint, event_id, qt, mm,
-         row_number() OVER (PARTITION BY fingerprint ORDER BY qt DESC, event_id DESC) AS rn,
+         row_number() OVER (PARTITION BY fingerprint ORDER BY qt DESC, doc_id, event_idx) AS rn,
          count(*) OVER (PARTITION BY fingerprint) AS total_queries
   FROM e
 )
@@ -530,46 +514,6 @@ FROM e
 EXT_QUERIES["slow_rollup_digest"] = (q_rollup_digest, O_ROLLUP_DIGEST)
 
 
-# -- resumable digest: chunk-level partials merged without re-reading events --
-
-def q_digest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental-aggregation law end-to-end: events are split into 3
-    pseudo-chunks (xxhash64 of doc_id — the split must NOT matter), each
-    chunk reduced to its mergeable partial digest (operators/aggregate.py:
-    partial_class_digest), and the partials merged (merge_class_digests).
-    The oracle derives the digest DIRECTLY from the source events, so any
-    non-mergeable state or order-dependent float drift in the partial/merge
-    split flips the hash.  This is the restart path of a checkpointed run:
-    merge committed partials in O(classes) instead of re-aggregating
-    O(events)."""
-    from mysql_log_parser_spark.operators.aggregate import (
-        merge_class_digests,
-        partial_class_digest,
-    )
-
-    ev = parsed_events(spark, sf_dir).withColumn(
-        "_shard", F.pmod(F.xxhash64("doc_id"), F.lit(3)).cast("int")
-    )
-    partials = partial_class_digest(ev, shard_col="_shard")
-    return merge_class_digests(partials)
-
-
-O_DIGEST_MERGE = _ORACLE_EVENTS_CTE + """
-SELECT upper(substr(md5(fingerprint), 17, 16)) AS class_id,
-       fingerprint,
-       count(*) AS total_queries,
-       sum(qt) AS qt_sum,
-       min(qt) AS qt_min,
-       max(qt) AS qt_max,
-       sum(qt)/count(*) AS qt_avg,
-       CAST(sum(rows_sent) AS BIGINT) AS rs_sum,
-       CAST(sum(rows_examined) AS BIGINT) AS rex_sum
-FROM e GROUP BY fingerprint
-"""
-
-EXT_QUERIES["slow_digest_merge"] = (q_digest_merge, O_DIGEST_MERGE)
-
-
 # -- bucketed co-located join: shuffle paid once at write time ----------------
 
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,17 +538,16 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="mlp_bucketed_")
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     tag = uuid.uuid4().hex[:8]
-    ev = parsed_events(spark, sf_dir).select(
-        "class_id", "fingerprint", F.col("query_time").cast("double").alias("qt")
-    )
+    ev = parsed_events(spark, sf_dir)
     write_bucketed(
-        ev.select("class_id", "qt"),
+        ev.select("class_id", F.col("query_time").cast("double").alias("qt")),
         f"mlp_ev_{tag}", f"{d}/ev", ("class_id",), 8, sort_cols=("class_id",),
     )
-    cls = ev.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("qt").alias("qt_sum"),
+    cls = class_digest(ev, "exact").select(
+        "class_id",
+        "fingerprint",
+        F.col("total_queries").alias("cnt"),
+        F.col("query_time_sum").alias("qt_sum"),
     )
     write_bucketed(cls, f"mlp_cls_{tag}", f"{d}/cls", ("class_id",), 8)
     j = colocated_join(spark, f"mlp_ev_{tag}", f"mlp_cls_{tag}", ["class_id"])

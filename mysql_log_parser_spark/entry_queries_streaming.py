@@ -25,7 +25,8 @@ from mysql_log_parser_spark.entry_queries import (
     docs_from_events,
     encode_tokens,
 )
-from mysql_log_parser_spark.streaming.pipeline import stream_events
+from mysql_log_parser_spark.operators.route import sink_counts
+from mysql_log_parser_spark.streaming.pipeline import start_routed_sink, stream_events
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -70,19 +71,12 @@ def q_stream_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream -> parse -> fingerprint -> routed parquet sink,
     then per-sink counts over what the STREAM wrote (routed-row equality
     with the batch-derived oracle)."""
-    from mysql_log_parser_spark.streaming.pipeline import start_routed_sink
-
     ind = _tokens_chunks(spark, sf_dir)
     out = _scratch_dir("mlp_stream_out_")
     ckpt = _scratch_dir("mlp_stream_ckpt_")
     q = start_routed_sink(stream_events(spark, ind), out, ckpt)
     _await_bounded(q)
-    routed = spark.read.parquet(out)
-    return routed.groupBy("source").agg(
-        F.count(F.lit(1)).alias("routed_rows"),
-        F.countDistinct("class_id").alias("distinct_classes"),
-        F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
-    )
+    return sink_counts(spark, out)
 
 
 O_STREAM_ROUTE_COUNTS = _ORACLE_EVENTS_CTE + """
@@ -165,10 +159,7 @@ def q_stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's derivation.  Late-data *eviction* (append mode + watermark
     drop) is exercised in tests/test_streaming.py; this query gates the
     windowed-aggregation semantics themselves."""
-    from mysql_log_parser_spark.streaming.pipeline import (
-        stream_events,
-        windowed_class_counts,
-    )
+    from mysql_log_parser_spark.streaming.pipeline import windowed_class_counts
 
     ind = _ext_tokens_chunks(spark, sf_dir)
     name = f"mlp_winagg_{uuid.uuid4().hex[:8]}"
@@ -186,8 +177,8 @@ def q_stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "class_id",
         "total_queries",
-        "qt_sum",
-        F.col("qt_max").cast("double").alias("qt_max"),
+        F.col("query_time_sum").alias("qt_sum"),
+        F.col("query_time_max").cast("double").alias("qt_max"),
     )
 
 
@@ -213,7 +204,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once upstream -> exactly-once downstream: every third doc is
     REDELIVERED (written to a second input chunk with identical doc_id), the
     stream parses both copies, and dropDuplicates on the event identity
-    (doc_id, event_idx) holds per-key state that admits each event once.
+    (doc_id, event_idx) holds per-key state that admits each event once
+    into the routed sink.
     The oracle is the single-delivery per-sink derivation, so any duplicate
     that leaks through — or any legitimate event the state wrongly drops —
     flips the hash.  Bounded availableNow run; production would add a
@@ -232,26 +224,11 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("n_tok", F.size("tokens"))
     redeliver.write.mode("append").parquet(ind)
 
-    name = f"mlp_dedup_{uuid.uuid4().hex[:8]}"
+    out = _scratch_dir("mlp_stream_dup_out_")
+    ckpt = _scratch_dir("mlp_stream_dup_ckpt_")
     ev = stream_events(spark, ind).dropDuplicates(["doc_id", "event_idx"])
-    q = (
-        ev.select("doc_id", "event_idx", "source", "class_id", "query_time")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q)
-    return (
-        spark.table(name)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("routed_rows"),
-            F.countDistinct("class_id").alias("distinct_classes"),
-            F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
-        )
-    )
+    _await_bounded(start_routed_sink(ev, out, ckpt))
+    return sink_counts(spark, out)
 
 
 STREAMING_QUERIES["stream_dedup"] = (q_stream_dedup, O_STREAM_ROUTE_COUNTS)

@@ -169,12 +169,15 @@ def _rate_aggs() -> dict[str, Column]:
     """Rate-limit state of GlobalClass (class.go:41-55).  The least and
     greatest (rate_type, rate_limit) pair over rate-limited events differ
     exactly when more than one distinct pair was seen, so the consistency
-    flag needs no distinct aggregate (see _global_columns)."""
+    flag needs no distinct aggregate (see _global_columns).  rate_type is
+    the least pair's type, whatever order the events arrive in, and ""
+    when no event was rate-limited."""
     rate = F.when(F.col("rate_type") != "", F.struct("rate_type", "rate_limit"))
+    lo = F.min(rate)
     return {
-        "_rate_lo": F.min(rate),
+        "_rate_lo": lo,
         "_rate_hi": F.max(rate),
-        "rate_type": F.max_by("rate_type", F.col("rate_type") != ""),
+        "rate_type": F.coalesce(lo["rate_type"], F.lit("")),
     }
 
 
@@ -205,9 +208,9 @@ def class_digest(
     `events` are pipeline.events rows (fingerprint/class_id, the promoted
     metric columns, and doc_id/event_idx for the example's tie-break).
     Groups by class_id (+ group_extra, e.g. ("source",) for per-sink
-    digests) and emits total_queries plus Query_time / Lock_time /
-    Rows_sent / Rows_examined stats and the argmax example
-    (class.go:100-116).  Catalyst drops the aggregates a caller does not
+    digests or ("win",) for the stream's event-time windows) and emits
+    total_queries plus Query_time / Lock_time / Rows_sent / Rows_examined
+    stats and the argmax example (class.go:100-116).  Catalyst drops the aggregates a caller does not
     select, so a projection of a few columns pays only for those.  Over a
     streaming `events` frame this is a stateful streaming aggregate: in
     update mode each micro-batch emits the running digest of every class it
@@ -243,51 +246,6 @@ def histogram(events: DataFrame, col: str = "query_time", buckets: int = 20) -> 
         .groupBy(b.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy("bucket")
-    )
-
-
-def partial_class_digest(
-    events: DataFrame, shard_col: str | None = None
-) -> DataFrame:
-    """Mergeable per-class partial state — the unit a RESUMABLE digest
-    persists per input chunk (CheckpointedRunner writes events per chunk;
-    writing THIS instead lets a restart merge committed partials without
-    ever re-reading their events).
-
-    Every field is associatively mergeable (cnt/sum/min/max); derived stats
-    (avg) are computed only after the merge, never stored.  With the
-    corpus's fixed-point metric encoding (Query_time quantized to k/64) the
-    float sums are exact in any grouping/merge order, so
-    merge(partial(A) + partial(B)) == digest(A u B) bit-for-bit — the law
-    test_merge_digest_law asserts and the slow_digest_merge oracle gates."""
-    keys = ([shard_col] if shard_col else []) + ["class_id"]
-    qt = F.col("query_time").cast("double")
-    return events.groupBy(*keys).agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(qt).alias("qt_sum"),
-        F.min(qt).alias("qt_min"),
-        F.max(qt).alias("qt_max"),
-        F.sum("rows_sent").alias("rs_sum"),
-        F.sum("rows_examined").alias("rex_sum"),
-    )
-
-
-def merge_class_digests(partials: DataFrame) -> DataFrame:
-    """Merge any union of partial_class_digest outputs (across chunks,
-    runs, or shards) into the combined per-class digest.  One keyed
-    aggregation over CLASS-cardinality rows — the events are never touched
-    again, which is what makes incremental/resumed aggregation O(classes)
-    instead of O(events) on restart."""
-    return partials.groupBy("class_id").agg(
-        F.first("fingerprint").alias("fingerprint"),
-        F.sum("cnt").alias("total_queries"),
-        F.sum("qt_sum").alias("qt_sum"),
-        F.min("qt_min").alias("qt_min"),
-        F.max("qt_max").alias("qt_max"),
-        (F.sum("qt_sum") / F.sum("cnt")).alias("qt_avg"),
-        F.sum("rs_sum").alias("rs_sum"),
-        F.sum("rex_sum").alias("rex_sum"),
     )
 
 

@@ -51,16 +51,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    FloatType,
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
 
 # Regexes, 1:1 with slow.go:16-21 (Python `\Z` == Go `\z`).
 TIME_RE = re.compile(r"Time: (\S+\s{1,2}\S+)", re.ASCII)
@@ -73,26 +64,6 @@ SET_RE = re.compile(r"SET (?:last_insert_id|insert_id|timestamp)")
 _UINT_RE = re.compile(r"[0-9]+\Z")  # strconv.ParseUint: no sign prefix permitted
 # meta lines (slow.go:107-119): '/...with:\n' | 'Time ' | 'Tcp ' | 'TCP ' prefix
 _META_RE = re.compile(r"(?:/.*with:\Z|Time |Tcp |TCP )", re.ASCII)
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("source", StringType()),
-        StructField("event_idx", IntegerType()),
-        StructField("offset", LongType()),
-        StructField("ts", StringType()),
-        StructField("admin", BooleanType()),
-        StructField("query", StringType()),
-        StructField("user", StringType()),
-        StructField("host", StringType()),
-        StructField("db", StringType()),
-        StructField("rate_type", StringType()),
-        StructField("rate_limit", IntegerType()),
-        StructField("time_metrics", MapType(StringType(), FloatType())),
-        StructField("number_metrics", MapType(StringType(), LongType())),
-        StructField("bool_metrics", MapType(StringType(), BooleanType())),
-    ]
-)
 
 _ARROW_SCHEMA = pa.schema(
     [
@@ -113,6 +84,8 @@ _ARROW_SCHEMA = pa.schema(
         ("bool_metrics", pa.map_(pa.string(), pa.bool_())),
     ]
 )
+
+EVENT_SCHEMA = from_arrow_schema(_ARROW_SCHEMA)
 
 _EMPTY_LONG = (np.empty(0, dtype=np.int64), np.empty(0, dtype=object), np.empty(0))
 

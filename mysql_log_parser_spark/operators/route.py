@@ -107,14 +107,15 @@ def read_sink(spark: SparkSession, base_path: str, source: str | None = None) ->
 
 
 def sink_counts(spark: SparkSession, base_path: str) -> DataFrame:
-    """Per-sink routed-row counts + distinct classes (the routed-row equality
-    / aggregate-count parity check surface)."""
+    """Per-sink routed-row counts, distinct classes and Query_time sum (the
+    routed-row equality / aggregate-count parity check surface)."""
     return (
         spark.read.parquet(base_path)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("routed_rows"),
             F.countDistinct("class_id").alias("distinct_classes"),
+            F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
         )
     )
 

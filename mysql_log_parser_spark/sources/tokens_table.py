@@ -31,8 +31,6 @@ TOKENS_SCHEMA = StructType(
     ]
 )
 
-TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
-
 
 def _has_iceberg(spark: SparkSession, name: str) -> bool:
     return "." in name and spark.conf.get(

@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mysql_log_parser_spark.operators.aggregate import class_digest
 from mysql_log_parser_spark.pipeline import events
-from mysql_log_parser_spark.sources.tokens_table import TOKENS_DDL
+from mysql_log_parser_spark.sources.tokens_table import TOKENS_SCHEMA
 
 
 def stream_events(
@@ -25,7 +26,7 @@ def stream_events(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """readStream over tokens chunks -> parsed+fingerprinted event stream."""
-    reader = spark.readStream.schema(TOKENS_DDL)
+    reader = spark.readStream.schema(TOKENS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return events(reader.parquet(input_dir))
@@ -36,27 +37,22 @@ def windowed_class_counts(
     window: str = "1 minute",
     watermark: str = "2 minutes",
 ) -> DataFrame:
-    """Event-time windowed per-class digest with late-data watermark.
+    """Event-time windowed per-class digest with late-data watermark:
+    class_digest grouped by (win, class_id), reduced to the count, the
+    Query_time sum and max, and the fingerprint.
 
     Event time comes from the parsed `ts` (yyMMdd H:mm:ss); events without a
     parsable ts fall back to processing time so they are not dropped.
     """
-    ev = events.withColumn(
-        "event_time",
-        F.coalesce(
-            F.try_to_timestamp(F.col("ts"), F.lit("yyMMdd H:mm:ss")),
-            F.current_timestamp(),
-        ),
+    event_time = F.coalesce(
+        F.try_to_timestamp(F.col("ts"), F.lit("yyMMdd H:mm:ss")),
+        F.current_timestamp(),
     )
-    return (
-        ev.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("win"), F.col("class_id"))
-        .agg(
-            F.count(F.lit(1)).alias("total_queries"),
-            F.sum(F.col("query_time").cast("double")).alias("qt_sum"),
-            F.max("query_time").alias("qt_max"),
-            F.first("fingerprint").alias("fingerprint"),
-        )
+    ev = events.withColumn("event_time", event_time).withWatermark("event_time", watermark)
+    return class_digest(
+        ev.withColumn("win", F.window("event_time", window)), group_extra=("win",)
+    ).select(
+        "win", "class_id", "total_queries", "query_time_sum", "query_time_max", "fingerprint"
     )
 
 

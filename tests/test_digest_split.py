@@ -107,3 +107,29 @@ def test_split_matches_sketch_digests(spark, events, rate):
     (got_gd,), (want_gd,) = gd.collect(), global_digest(ev).collect()
     _assert_sketch_row(got_gd.asDict(), want_gd.asDict(), overall, "global")
     assert got_gd.mixed_rate_limits is (rate == "mixed")
+
+
+def test_rate_type_is_layout_independent(spark):
+    """A log with two rate types, 8 events each: rate_type is the least
+    (rate_type, rate_limit) pair's type whatever order the partitions hold
+    the events in, from global_digest in both modes and from the split."""
+    def doc(i):
+        return (
+            "# Time: 240101 10:00:00\n# User@Host: u[u] @ h []\n"
+            "# Query_time: 1.000000  Lock_time: 0.000000 Rows_sent: 1  Rows_examined: 1\n"
+            f"# Log_slow_rate_type: {'query' if i < 8 else 'session'}  Log_slow_rate_limit: 10\n"
+            f"SELECT c FROM t WHERE id={i};\n"
+        )
+
+    rows = [(f"d{i:02d}", doc(i), "s0") for i in range(16)]
+    got = []
+    for layout in (rows, rows[::-1]):
+        docs = spark.sparkContext.parallelize(layout, 4).toDF(
+            "doc_id string, text string, source string"
+        )
+        ev = pipeline.events(docs)
+        for mode in ("exact", "sketch"):
+            for gd in (global_digest(ev, mode), _split(ev, mode)[1]):
+                (r,) = gd.collect()
+                got.append((r.rate_type, r.mixed_rate_limits))
+    assert got == [("query", True)] * 8, got

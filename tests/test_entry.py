@@ -87,3 +87,10 @@ def test_entry_smoke(spark):
     assert df.count() > 0
     assert "class_id" in df.columns and "total_queries" in df.columns
     assert rows[0].total_queries >= 1
+
+
+def test_verify_first_names_are_entries():
+    """_all_queries skips _VERIFY_FIRST names that are not entries, so a
+    stale name (a removed gate) would linger unnoticed without this check."""
+    stale = [n for n in entry_mod._VERIFY_FIRST if n not in entry_mod.queries()]
+    assert not stale, stale

@@ -185,40 +185,6 @@ def test_asof_join_semantics(spark):
     }
 
 
-def test_merge_digest_law(spark, synth_docs):
-    """merge(partial(shard_i)) must equal the unsharded digest for ANY
-    sharding — the restart contract of incremental aggregation (partials
-    from committed chunks merge in O(classes) without re-reading events)."""
-    from mysql_log_parser_spark.operators.aggregate import (
-        merge_class_digests,
-        partial_class_digest,
-    )
-
-    ev = events(synth_docs)
-    direct = {
-        r["class_id"]: r.asDict()
-        for r in merge_class_digests(partial_class_digest(ev)).collect()
-    }
-    for mod in (2, 5):
-        sharded = ev.withColumn(
-            "_shard", F.pmod(F.xxhash64("doc_id"), F.lit(mod)).cast("int")
-        )
-        merged = {
-            r["class_id"]: r.asDict()
-            for r in merge_class_digests(
-                partial_class_digest(sharded, shard_col="_shard")
-            ).collect()
-        }
-        assert set(merged) == set(direct)
-        for cid, want in direct.items():
-            got = merged[cid]
-            for k, v in want.items():
-                if isinstance(v, float):
-                    assert got[k] == pytest.approx(v, rel=1e-12), (cid, k)
-                else:
-                    assert got[k] == v, (cid, k)
-
-
 def test_compact_routed(spark, synth_docs, tmp_path):
     """Compaction must shrink per-sink file counts without changing a row:
     write the routed layout deliberately fragmented (32 shuffle partitions

@@ -117,6 +117,43 @@ def test_streaming_digest_is_a_builtin_aggregate(spark, tokens_dir):
     assert python_nodes == ["MapInArrow"], python_nodes
 
 
+def test_windowed_stream_digest_is_class_digest(spark, tokens_dir):
+    """The event-time windowed stream digest is class_digest grouped by
+    window: a stateful aggregate of exactly count, sum, max and first
+    (Catalyst prunes the unselected percentile and example aggregates), and
+    no Python node besides the parse's one MapInArrow."""
+    import re
+
+    from mysql_log_parser_spark.streaming.pipeline import (
+        stream_events,
+        windowed_class_counts,
+    )
+
+    q = (
+        windowed_class_counts(stream_events(spark, tokens_dir))
+        .writeStream.format("memory")
+        .queryName("plan_guard_windowed")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    assert "StateStoreSave" in plan, plan
+    assert "percentile_approx" not in plan and "min_by" not in plan
+    funcs = {
+        name
+        for agg in re.findall(r"functions=\[(.*)\]\)", plan)
+        for name in re.findall(r"(?:^|, )(?:partial_|merge_)?(\w+)\(", agg)
+    }
+    assert funcs == {"count", "sum", "max", "first"}, funcs
+    python_nodes = re.findall(r"\b\w*(?:Python|Pandas|Arrow)\w*", plan)
+    assert python_nodes == ["MapInArrow"], python_nodes
+
+
 def _docs_df(spark):
     return spark.createDataFrame(
         [(i, f"src{i % 3}", f"some words repeated words here doc {i}") for i in range(30)],
