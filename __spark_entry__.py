@@ -51,6 +51,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # remainder is filled with the OLDEST (r03-latest) rows so every entry's
 # driver row stays as fresh as 110 entries / 50-cap allows.
 _VERIFY_FIRST = [
+    # gates whose implementation or oracle moved onto one textops kernel:
+    # theta sketches, the single winnowing kernel, the production
+    # with_nearest_centroid / centroid_dots / near_dup_pairs_cosine
+    "source_overlap_sketch",
+    "ngram_novelty_sketch",
+    "winnow_fingerprints",
+    "winnow_dup_pairs",
+    "embed_near_dup",
+    "ann_ivf_topk",
+    "ann_ivf_probe2",
+    "ann_kmeans_step",
+    "ann_kmeans_iter2",
+    "ann_ivfpq_adc",
+    "ann_ivfpq_rerank",
+    "ann_pq_recall",
+    "ann_ivfpq_residual",
+    "ann_pq_recall_residual",
+    "semantic_dedup",
     # gates whose implementation now calls the production class_digest /
     # route_partitioned + sink_counts (gate-freshness rotation)
     "slow_example_select",
@@ -61,8 +79,6 @@ _VERIFY_FIRST = [
     "stream_dedup",
     "slow_bucketed_join",
     # (a) new this round, never driver-gated
-    "ann_ivfpq_residual",
-    "ann_pq_recall_residual",
     "bpe_train_sampled",
     "incremental_lsh_append",
     "quality_calibrate",
@@ -76,7 +92,6 @@ _VERIFY_FIRST = [
     "simhash_docs",
     "ann_cosine_topk",
     "dedup_exact",
-    "embed_near_dup",
     "split_assign",
     "stratified_sample",
     # (c) implementation changed after their r04 gate (round-5 commits:
@@ -84,15 +99,10 @@ _VERIFY_FIRST = [
     # double-safe DSIR, bounded LSH caches + shared oracle builder,
     # PQ encode routing + prenormed rerank + residual audit, snapshot-log
     # prefix guard, sampled-BPE oracle builder param)
-    "winnow_fingerprints",
-    "winnow_dup_pairs",
     "dsir_weights",
     "incremental_lsh_dedup",
     "stream_lsh_dedup",
     "dedup_substring",
-    "ann_ivfpq_adc",
-    "ann_ivfpq_rerank",
-    "ann_pq_recall",
     "slow_snapshot_range",
     "bpe_train8",
     # (d) r03-latest rows, oldest first; module-touched ones lead

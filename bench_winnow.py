@@ -1,11 +1,11 @@
 """Winnow gram-hash kernel microbench (VERDICT r4 item 2 done-criterion).
 
 Times `winnow_fingerprints` over the same replicated corpus with the
-gate/oracle kernel (kernel='arrow': one Python hashlib.md5 call per
-character position) vs the production kernel (kernel='fast': vectorized
-numpy rolling polynomial hash + sort-free run-dedup selection).  Both
-kernels share the selection semantics (parity-tested with injected hashes
-in tests/test_winnow.py); only the gram-hash values differ, so row counts
+gate/oracle gram hash (hash_fn=gram_hashes_md5: one Python hashlib.md5
+call per character position) vs the production default
+(hash_fn=gram_hashes_fast: vectorized numpy rolling polynomial hash).
+Both feed the same run-dedup selection (checked with injected hashes in
+tests/test_winnow.py); only the gram-hash values differ, so row counts
 are near-identical (expected density 2/(w+1) either way) but not equal.
 
 Two ratios are reported:
@@ -16,7 +16,7 @@ Two ratios are reported:
 - operator_ratio: the full Spark operator wall-clock at the replicated
   corpus — smaller, because once hashing is vectorized the operator is
   bound by the shared Arrow transfer of ~2/(w+1) fingerprint rows per
-  position, a cost both kernels pay identically.
+  position, a cost both hashes pay identically.
 
 Usage: python bench_winnow.py [sf_dir] [replicate] [cpus]
 Defaults: /root/testdata/sf0.1, 20 (-> 100k docs / ~30 MB text), 32.
@@ -34,22 +34,20 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from mysql_log_parser_spark.session import build_session
-from mysql_log_parser_spark.textops.winnow import K, W, winnow_fingerprints
+from mysql_log_parser_spark.textops.winnow import (
+    K,
+    W,
+    _select_fingerprints,
+    gram_hashes_fast,
+    gram_hashes_md5,
+    winnow_fingerprints,
+)
 
 
 def kernel_bench(sf_dir: str) -> dict:
     """Single-core in-process hash+select timing (min-of-3) over the raw
     corpus — no Spark, no Arrow: the per-position kernel cost itself."""
     import duckdb
-    import numpy as np
-
-    from mysql_log_parser_spark.textops.winnow import (
-        POSCAP,
-        _select_fingerprints,
-        _select_fingerprints_fast,
-        gram_hashes_fast,
-        gram_hashes_md5,
-    )
 
     texts = [
         r[0]
@@ -60,18 +58,15 @@ def kernel_bench(sf_dir: str) -> dict:
     ]
     n_pos = sum(len(t) - K + 1 for t in texts)
 
-    def md5_full(t: str, npos: int) -> None:
-        _select_fingerprints(gram_hashes_md5(t, K, npos), 1, W)
-
-    def fast_full(t: str, npos: int) -> None:
-        hs = gram_hashes_fast(t, K, npos)
-        c = hs * POSCAP + (POSCAP - 1 - np.arange(1, npos + 1, dtype=np.int64))
-        _select_fingerprints_fast(c, W)
-
     out = {}
-    for name, fn in (("md5", md5_full), ("fast", fast_full)):
+    for name, fn in (("md5", gram_hashes_md5), ("fast", gram_hashes_fast)):
         best = min(
-            _timed(lambda: [fn(t, len(t) - K + 1) for t in texts])
+            _timed(
+                lambda: [
+                    _select_fingerprints(fn(t, K, len(t) - K + 1), W)
+                    for t in texts
+                ]
+            )
             for _ in range(3)
         )
         out[name] = {
@@ -118,14 +113,15 @@ def main() -> None:
     ).first()[0]
 
     results = {}
-    for kernel in ("fast", "arrow"):  # fast first: its warmup is cheaper
-        winnow_fingerprints(corpus, kernel=kernel).count()  # warmup
+    # fast first: its warmup is cheaper
+    for name, fn in (("fast", gram_hashes_fast), ("md5", gram_hashes_md5)):
+        winnow_fingerprints(corpus, hash_fn=fn).count()  # warmup
         dt, rows = 1e9, 0
         for _ in range(3):  # min-of-3: single-box IO noise control
             t0 = time.monotonic()
-            rows = winnow_fingerprints(corpus, kernel=kernel).count()
+            rows = winnow_fingerprints(corpus, hash_fn=fn).count()
             dt = min(dt, time.monotonic() - t0)
-        results[kernel] = {
+        results[name] = {
             "seconds": round(dt, 3),
             "fp_rows": rows,
             "positions_per_sec": round(n_pos / dt),
@@ -140,7 +136,7 @@ def main() -> None:
                 "kernel_bench": kern,
                 "operator_ratio": round(
                     results["fast"]["positions_per_sec"]
-                    / results["arrow"]["positions_per_sec"],
+                    / results["md5"]["positions_per_sec"],
                     2,
                 ),
                 "n_docs": n_docs,

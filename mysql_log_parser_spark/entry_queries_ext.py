@@ -36,7 +36,11 @@ from mysql_log_parser_spark.operators.parse import parse_slowlog
 from mysql_log_parser_spark.pipeline import events
 from mysql_log_parser_spark.textops.dedup import ngram_jaccard_pairs_bruteforce
 from mysql_log_parser_spark.textops.multimodal import extract_features
-from mysql_log_parser_spark.textops.similarity import cosine
+from mysql_log_parser_spark.textops.similarity import (
+    centroid_dots,
+    cosine,
+    with_nearest_centroid,
+)
 
 HEXD = "0123456789abcdef"
 EVENTS_PER_DOC = 20
@@ -381,11 +385,17 @@ def _centroid_literals(k: int = _IVF_C) -> list[list[float]]:
     return cents
 
 
-def _dot_lit(v: F.Column, lits: list[float]) -> F.Column:
-    arr = F.array(*[F.lit(x) for x in lits])
-    return F.aggregate(
-        F.zip_with(v, arr, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
+def _o_centroid_dots(vec: str, cents: list[list[float]]) -> str:
+    """DuckDB twin of similarity.centroid_dots: the list of dot(vec, c_i),
+    each folded in index order like the Catalyst aggregate."""
+    return f"list_transform({cents}, ct -> list_dot_product({vec}, ct))"
+
+
+def _o_cell(dots: str) -> str:
+    """DuckDB twin of similarity.with_nearest_centroid's cell: the 0-based
+    index of the FIRST maximal entry of the dot list `dots` (ties to the
+    smallest cell, as array_position(array_max) does)."""
+    return f"CAST(list_indexof({dots}, list_max({dots})) - 1 AS BIGINT)"
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -398,16 +408,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    # argmax dot, ties to the smallest centroid index (max over (dot, -idx))
-    choice = F.array_max(
-        F.array(
-            *[
-                F.struct(_dot_lit(F.col("v"), cents[c]).alias("d"), F.lit(-c).alias("nc"))
-                for c in range(_IVF_C)
-            ]
-        )
-    )
-    cells = e.withColumn("cell", (-choice.getField("nc")).cast("long"))
+    cells = with_nearest_centroid(e, cents)
     q = cells.where(F.col("vec_id") < _IVF_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cell"
     )
@@ -430,21 +431,15 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _o_ann_ivf() -> str:
     cents = _centroid_literals()
-    dots = ", ".join(
-        f"list_dot_product(v, {cents[c]}) AS d{c}" for c in range(_IVF_C)
-    )
-    cell = (
-        "CASE WHEN d0 >= d1 AND d0 >= d2 AND d0 >= d3 THEN 0 "
-        "WHEN d1 >= d2 AND d1 >= d3 THEN 1 "
-        "WHEN d2 >= d3 THEN 2 ELSE 3 END"
-    )
+    dots = f"{_o_centroid_dots('v', cents)} AS dl"
+    cell = _o_cell("dl")
     return f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), d AS (
   SELECT vec_id, v, {dots} FROM e
 ), cells AS (
-  SELECT vec_id, v, CAST({cell} AS BIGINT) AS cell FROM d
+  SELECT vec_id, v, {cell} AS cell FROM d
 ), scored AS (
   SELECT q.vec_id AS query_id, q.cell AS cell, n.vec_id AS neighbor_id,
          round(list_dot_product(q.v, n.v)
@@ -709,15 +704,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    choice = F.array_max(
-        F.array(
-            *[
-                F.struct(_dot_lit(F.col("v"), cents[c]).alias("d"), F.lit(-c).alias("nc"))
-                for c in range(_IVF_C)
-            ]
-        )
-    )
-    cells = e.withColumn("cell", (-choice.getField("nc")).cast("long"))
+    cells = with_nearest_centroid(e, cents)
     return (
         cells.select("cell", F.posexplode("v").alias("pos", "x"))
         .where(F.col("pos") < _KM_DIMS)
@@ -733,21 +720,15 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _o_kmeans_step() -> str:
     cents = _centroid_literals()
-    dots = ", ".join(
-        f"list_dot_product(v, {cents[c]}) AS d{c}" for c in range(_IVF_C)
-    )
-    cell = (
-        "CASE WHEN d0 >= d1 AND d0 >= d2 AND d0 >= d3 THEN 0 "
-        "WHEN d1 >= d2 AND d1 >= d3 THEN 1 "
-        "WHEN d2 >= d3 THEN 2 ELSE 3 END"
-    )
+    dots = f"{_o_centroid_dots('v', cents)} AS dl"
+    cell = _o_cell("dl")
     return f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), d AS (
   SELECT vec_id, v, {dots} FROM e
 ), cells AS (
-  SELECT vec_id, v, CAST({cell} AS BIGINT) AS cell FROM d
+  SELECT vec_id, v, {cell} AS cell FROM d
 )
 SELECT cell, CAST(p - 1 AS BIGINT) AS pos, count(*) AS n, round(avg(v[p]), 6) AS mean
 FROM cells, (SELECT unnest(generate_series(1, {_KM_DIMS})) AS p)
@@ -937,19 +918,8 @@ def q_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("v"),
     )
 
-    def assign(df, cents):
-        choice = F.array_max(
-            F.array(
-                *[
-                    F.struct(_dot_lit(F.col("v"), cents[c]).alias("d"), F.lit(-c).alias("nc"))
-                    for c in range(len(cents))
-                ]
-            )
-        )
-        return df.withColumn("cell", (-choice.getField("nc")).cast("long"))
-
     # iteration 1: seed centroids -> assignment -> elementwise means
-    a1 = assign(e, _centroid_literals())
+    a1 = with_nearest_centroid(e, _centroid_literals())
     m1 = (
         a1.select("cell", F.posexplode("v").alias("pos", "x"))
         .groupBy("cell", "pos")
@@ -976,7 +946,7 @@ def q_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_cents = [cents2.get(c, seeds[c]) for c in range(_IVF_C)]
 
     # iteration 2 with the updated centroids
-    a2 = assign(e, new_cents)
+    a2 = with_nearest_centroid(e, new_cents)
     return a2.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.aggregate("v", F.lit(0.0), lambda a, x: a + x)), 6).alias("coord_sum6"),
@@ -985,12 +955,7 @@ def q_kmeans_iter2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _o_kmeans_iter2() -> str:
     cents = _centroid_literals()
-    dots1 = ", ".join(f"list_dot_product(v, {cents[c]}) AS d{c}" for c in range(_IVF_C))
-    cell_case = (
-        "CASE WHEN d0 >= d1 AND d0 >= d2 AND d0 >= d3 THEN 0 "
-        "WHEN d1 >= d2 AND d1 >= d3 THEN 1 "
-        "WHEN d2 >= d3 THEN 2 ELSE 3 END"
-    )
+    dots1 = f"{_o_centroid_dots('v', cents)} AS dl"
     # iteration-2 dot products: sum over dims of v[p] * centroid2[cell][p],
     # centroid2 = per-(cell,pos) mean from iteration 1 (seeds for empty cells)
     dots2 = ", ".join(
@@ -998,18 +963,14 @@ def _o_kmeans_iter2() -> str:
              FROM m WHERE m.cell = {c}) AS e{c}"""
         for c in range(_IVF_C)
     )
-    cell2_case = (
-        "CASE WHEN e0 >= e1 AND e0 >= e2 AND e0 >= e3 THEN 0 "
-        "WHEN e1 >= e2 AND e1 >= e3 THEN 1 "
-        "WHEN e2 >= e3 THEN 2 ELSE 3 END"
-    )
+    dots2_list = "[" + ", ".join(f"e{c}" for c in range(_IVF_C)) + "]"
     return f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), d1 AS (
   SELECT vec_id, v, {dots1} FROM e
 ), a1 AS (
-  SELECT vec_id, v, CAST({cell_case} AS BIGINT) AS cell FROM d1
+  SELECT vec_id, v, {_o_cell("dl")} AS cell FROM d1
 ), m AS (
   SELECT cell, CAST(p - 1 AS BIGINT) AS pos, round(avg(v[p]), 9) AS mean
   FROM a1, (SELECT unnest(generate_series(1, {_IVF_DIM})) AS p)
@@ -1017,7 +978,7 @@ WITH e AS (
 ), d2 AS (
   SELECT vec_id, v, {dots2} FROM e
 ), a2 AS (
-  SELECT vec_id, v, CAST({cell2_case} AS BIGINT) AS cell FROM d2
+  SELECT vec_id, v, {_o_cell(dots2_list)} AS cell FROM d2
 )
 SELECT cell, count(*) AS n,
        round(sum(list_sum(v)), 6) AS coord_sum6
@@ -1306,10 +1267,10 @@ WITH c AS (
   WHERE vec_id % {_SD_DUP_MOD} = 0
 ), d AS (
   SELECT vec_id, v,
-         list_transform({cents}, ct -> list_dot_product(v, ct)) AS dl
+         {_o_centroid_dots("v", cents)} AS dl
   FROM c
 ), cells AS (
-  SELECT vec_id, v, CAST(list_indexof(dl, list_max(dl)) - 1 AS BIGINT) AS cell FROM d
+  SELECT vec_id, v, {_o_cell("dl")} AS cell FROM d
 ), pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -1907,27 +1868,28 @@ def q_ann_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joined — the wide edge stays keyed by cell id, and only the tiny
     query side fans out x2.
 
-    The probe ranking (argsort of centroid dots) is one array_sort over a
-    4-struct array built from the SAME fold as the cell assignment, so
-    query and index sides can never disagree on the geometry."""
+    The probe ranking (argsort of centroid dots) is one array_sort over
+    the SAME similarity.centroid_dots fold with_nearest_centroid takes its
+    argmax from, so query and index sides can never disagree on the
+    geometry."""
     cents = _centroid_literals()
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    dots = F.array(
-        *[
-            F.struct(_dot_lit(F.col("v"), cents[c]).alias("d"), F.lit(-c).alias("nc"))
-            for c in range(_IVF_C)
-        ]
+    # ascending sort on (-dot, cell): best dot first, ties to the smaller
+    # cell index (with_nearest_centroid's tie rule)
+    ranked = F.array_sort(
+        F.transform(
+            centroid_dots(F.col("v"), cents),
+            lambda d, i: F.struct((-d).alias("nd"), i.cast("long").alias("cell")),
+        )
     )
-    # descending struct sort: best dot first, ties to the smaller cell index
-    ranked = F.reverse(F.array_sort(dots))
     cells = e.withColumn("_r", ranked)
     n = cells.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("nv"),
-        (-F.element_at("_r", 1).getField("nc")).cast("long").alias("cell"),
+        F.element_at("_r", 1).getField("cell").alias("cell"),
     )
     q = (
         cells.where(F.col("vec_id") < _IVF_NQ)
@@ -1940,7 +1902,7 @@ def q_ann_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "qv",
             (F.col("pos") + 1).cast("long").alias("probe_rank"),
-            (-F.col("col").getField("nc")).cast("long").alias("cell"),
+            F.col("col").getField("cell").alias("cell"),
         )
     )
     scored = (
@@ -2110,15 +2072,7 @@ def _ivfpq_frames(spark: SparkSession, sf_dir: str):
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    choice = F.array_max(
-        F.array(
-            *[
-                F.struct(_dot_lit(F.col("v"), cents[c]).alias("d"), F.lit(-c).alias("nc"))
-                for c in range(_IVF_C)
-            ]
-        )
-    )
-    cells = e.withColumn("cell", (-choice.getField("nc")).cast("long"))
+    cells = with_nearest_centroid(e, cents)
     # index-side encoding goes through pq_encode(kernel='auto'): at gate
     # dims (M*Ks*sub = 512) it resolves to the oracle-replicable Catalyst
     # literal folds; past the literal threshold the SAME call falls onto
@@ -2246,18 +2200,14 @@ q_ann_ivfpq_rerank.__doc__ = q_ann_ivfpq_rerank.__doc__.format(r=_PQ_R)
 def _ivfpq_sql_parts() -> dict:
     """Shared SQL fragments for the IVF-PQ oracle family: the per-subspace
     code argmins, the per-query ADC expression (identical parenthesization
-    to pq.adc_lut_cols/adc_distance), and the cell CASE."""
+    to pq.adc_lut_cols/adc_distance), and the argmax cell."""
     from mysql_log_parser_spark.textops.pq import pq_codebooks
 
     books = pq_codebooks(_PQ_M, _PQ_KS, _IVF_DIM)
     cents = _centroid_literals()
     sub = _IVF_DIM // _PQ_M
-    dots = ", ".join(f"list_dot_product(v, {cents[c]}) AS d{c}" for c in range(_IVF_C))
-    cell = (
-        "CASE WHEN d0 >= d1 AND d0 >= d2 AND d0 >= d3 THEN 0 "
-        "WHEN d1 >= d2 AND d1 >= d3 THEN 1 "
-        "WHEN d2 >= d3 THEN 2 ELSE 3 END"
-    )
+    dots = f"{_o_centroid_dots('v', cents)} AS dl"
+    cell = _o_cell("dl")
 
     def cand(col: str, s: int, ci: int) -> str:
         c = books[s][ci]
@@ -2296,7 +2246,7 @@ WITH e AS (
 ), d AS (
   SELECT vec_id, v, {dots} FROM e
 ), cells AS (
-  SELECT vec_id, v, CAST({cell} AS BIGINT) AS cell FROM d
+  SELECT vec_id, v, {cell} AS cell FROM d
 ), coded AS (
   SELECT vec_id, v, cell, {codes} FROM cells
 ), scored AS (
@@ -2509,15 +2459,7 @@ def _rpq_frames(spark: SparkSession, sf_dir: str):
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     wdf = e.select("vec_id", wcol("vec_id", "v").alias("w"))
-    choice = F.array_max(
-        F.array(
-            *[
-                F.struct(_dot_lit(F.col("w"), cents[c]).alias("d"), F.lit(-c).alias("nc"))
-                for c in range(_IVF_C)
-            ]
-        )
-    )
-    cells = wdf.withColumn("cell", (-choice.getField("nc")).cast("long"))
+    cells = with_nearest_centroid(wdf, cents, vec_col="w")
     # Index-side encodes through kernel='auto', which at M=16/Ks=16 routes
     # onto the ARROW kernels via the argmin-struct pricing
     # (pq._ARGMIN_STRUCT_SWITCH): the literal argmin trees here are ~256
@@ -2652,7 +2594,7 @@ def _rpq_sql_parts() -> dict:
     """SQL fragments for the residual-PQ oracle family, with expression
     trees (operand order, parenthesization, constant literals) matched
     digit-for-digit to _rpq_frames' Spark side: the derived clustered
-    corpus w, the 4-cell CASE, raw + residual code argmins, and raw +
+    corpus w, the argmax cell, raw + residual code argmins, and raw +
     residual ADC expressions."""
     from mysql_log_parser_spark.textops.pq import pq_codebooks, residual_const1
 
@@ -2665,14 +2607,8 @@ def _rpq_sql_parts() -> dict:
         f"list_transform(generate_series(1, {_IVF_DIM}), "
         f"j -> ({cmat})[vec_id % {_IVF_C} + 1][j] + 0.25 * v[j])"
     )
-    dots = ", ".join(
-        f"list_dot_product(w, {cents[c]}) AS d{c}" for c in range(_IVF_C)
-    )
-    cell = (
-        "CASE WHEN d0 >= d1 AND d0 >= d2 AND d0 >= d3 THEN 0 "
-        "WHEN d1 >= d2 AND d1 >= d3 THEN 1 "
-        "WHEN d2 >= d3 THEN 2 ELSE 3 END"
-    )
+    dots = f"{_o_centroid_dots('w', cents)} AS dl"
+    cell = _o_cell("dl")
 
     def sl(col: str, s: int) -> str:
         return f"{col}[{s * sub + 1}:{(s + 1) * sub}]"
@@ -2756,7 +2692,7 @@ WITH e AS (
 ), d AS (
   SELECT vec_id, w, {dots} FROM wt
 ), cells AS (
-  SELECT vec_id, w, CAST({cell} AS BIGINT) AS cell FROM d
+  SELECT vec_id, w, {cell} AS cell FROM d
 ), coded AS (
   SELECT vec_id, w, cell, {codes}, {rcodes} FROM cells
 )"""

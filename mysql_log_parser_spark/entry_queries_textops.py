@@ -15,8 +15,6 @@ Engine-portability rules used throughout:
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -346,20 +344,13 @@ _DUP_MOD = 11
 _COS_T = 0.95
 
 
-def _plane_literals(n_planes: int, dim: int) -> list[list[float]]:
-    """Deterministic +/-1 hyperplanes from md5 parity — precomputed so both
-    engines embed the same literals."""
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for j in range(dim):
-            h = hashlib.md5(f"p{p}d{j}".encode()).hexdigest()
-            row.append(1.0 if int(h[0], 16) % 2 == 1 else -1.0)
-        planes.append(row)
-    return planes
-
-
 def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gates textops/similarity.py:near_dup_pairs_cosine — one md5-seeded
+    hyperplane table buckets the corpus, the exact prenormed cosine is
+    thresholded unrounded inside the operator and rounded only for the
+    hash compare.  Exact duplicates are injected so there is signal."""
+    from mysql_log_parser_spark.textops.similarity import near_dup_pairs_cosine
+
     e = _emb(spark, sf_dir).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
@@ -368,46 +359,21 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dupes = e.where(F.col("vec_id") % _DUP_MOD == 0).select(
         (-(F.col("vec_id") + 1)).alias("vec_id"), "v"
     )
-    corpus = e.unionByName(dupes)
-    planes = _plane_literals(_PLANES, _DIM)
-    sig = F.lit(0)
-    for p, row in enumerate(planes):
-        lit_arr = F.array(*[F.lit(x) for x in row])
-        d = F.aggregate(
-            F.zip_with(F.col("v"), lit_arr, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(d > 0, F.lit(2**p)).otherwise(F.lit(0))
-    from mysql_log_parser_spark.textops.similarity import cosine_prenorm, norm
-
-    s = corpus.withColumn("bucket", sig).withColumn("nrm", norm(F.col("v")))
-    a, b = s.alias("a"), s.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn(
-            "cos6",
-            F.round(
-                cosine_prenorm(
-                    F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
-                ),
-                6,
-            ),
-        )
-        .where(F.col("cos6") >= _COS_T)
-        .select(
-            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"), "cos6"
-        )
+    pairs = near_dup_pairs_cosine(
+        e.unionByName(dupes), _DIM, threshold=_COS_T, vec_col="v",
+        n_planes=_PLANES,
     )
+    return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cos6"))
 
 
 def _o_embed_near_dup() -> str:
-    planes = _plane_literals(_PLANES, _DIM)
+    """Same md5 planes (similarity._plane, table 0) and the same unrounded
+    threshold as the operator: DuckDB's list_dot_product folds in index
+    order like the Catalyst aggregate, so the cosine doubles agree."""
+    from mysql_log_parser_spark.textops.similarity import _plane
+
     bits = " + ".join(
-        f"CASE WHEN list_dot_product(v, {planes[p]}) > 0 THEN {2**p} ELSE 0 END"
+        f"CASE WHEN list_dot_product(v, {_plane(0, p, _DIM)}) > 0 THEN {2**p} ELSE 0 END"
         for p in range(_PLANES)
     )
     return f"""
@@ -417,13 +383,13 @@ WITH c AS (
   SELECT -(vec_id + 1), embedding::DOUBLE[] FROM embeddings WHERE vec_id % {_DUP_MOD} = 0
 ), s AS (
   SELECT vec_id, v, {bits} AS bucket FROM c
+), p AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         list_dot_product(a.v, b.v)
+         / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS cosine
+  FROM s a JOIN s b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos6
-FROM s a JOIN s b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round(list_dot_product(a.v, b.v)
-            / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= {_COS_T}
+SELECT id_a, id_b, round(cosine, 6) AS cos6 FROM p WHERE cosine >= {_COS_T}
 """
 
 
@@ -1836,9 +1802,10 @@ def q_ngram_novelty_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ngram_novelty` through a deterministic hash-sample of the trigram
     value space — the 100 TB path where the exact global frequency table is
     a corpus-scale shuffle per audit (the remaining scale gap the r3 review
-    called out alongside `source_overlap`, fixed there by KMV sketches;
-    KMV cannot answer frequency==1, so the novelty analogue is value-space
-    sampling a la distinct-sampling estimators, Gibbons 2001).
+    called out alongside `source_overlap`, fixed there by theta sketches;
+    a distinct-set sketch cannot answer frequency==1, so the novelty
+    analogue is value-space sampling a la distinct-sampling estimators,
+    Gibbons 2001).
 
     Scale shape: the md5 threshold prunes (1 - RATE) of trigram
     OCCURRENCES before the shuffle, so the frequency build and the
@@ -1854,7 +1821,6 @@ def q_ngram_novelty_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     band 0.1 + 1.5/sqrt(n_sampled) of the exact share (docs whose sampled
     trigram set is empty are vacuously in band — at RATE * n_tri -> 0 the
     estimator abstains rather than lies)."""
-    from mysql_log_parser_spark.textops.kmv import md5_48
     from mysql_log_parser_spark.textops.quality import words_of
 
     d = _docs(spark, sf_dir).select(
@@ -1866,7 +1832,9 @@ def q_ngram_novelty_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             _word_trigrams()
         ).alias("tri"),
     )
-    samp = tris.where(md5_48(F.col("tri")) < F.lit(_NOV_THRESHOLD))
+    # first 48 bits of md5 as a long: the repo-standard item hash
+    h48 = F.conv(F.substring(F.md5("tri"), 1, 12), 16, 10).cast("long")
+    samp = tris.where(h48 < F.lit(_NOV_THRESHOLD))
     freq = samp.groupBy("tri").agg(F.count(F.lit(1)).alias("n"))
     est = (
         samp.join(freq, "tri")
@@ -1980,46 +1948,50 @@ FROM inter JOIN base ON base.source = inter.source_a
 TEXTOPS_QUERIES["source_overlap"] = (q_source_overlap, O_SOURCE_OVERLAP)
 
 
-# -- 26b. sketched source overlap (KMV) ---------------------------------------
+# -- 26b. sketched source overlap (theta sketches) ------------------------------
 
-_KMV_K = 256
-# Absolute error band on the containment FRACTION: KMV Jaccard std error is
-# ~1/sqrt(k) (~0.0625 at k=256) and the containment estimate compounds the
-# union and per-source cardinality estimators, so the gate allows 3x that.
-_KMV_BAND = 0.2
+# lgNomEntries: 256 nominal entries, below the ~1.1-1.5k distinct trigrams a
+# source holds at sf0.01, so the gate runs the sketch in estimation mode.
+_THETA_LG = 8
+# Absolute error band on the containment FRACTION: the theta relative std
+# error is ~1/sqrt(256) (~0.0625) and the containment estimate divides an
+# intersection estimate by a cardinality estimate, so the gate allows 3x that.
+_THETA_BAND = 0.2
+
+
+def _theta_containment(st: DataFrame) -> DataFrame:
+    """(source, tri) rows -> (source_a, source_b, share_est) for every
+    ordered pair of distinct sources, share_est estimating the share of
+    a's distinct trigrams also in b.  One Spark theta sketch per source
+    (partial aggregation, so the shuffle carries sketches, not trigrams);
+    the |sources|^2 pairwise stage intersects broadcast sketches."""
+    sk = st.groupBy("source").agg(F.theta_sketch_agg("tri", _THETA_LG).alias("sk"))
+    a = sk.select(F.col("source").alias("source_a"), F.col("sk").alias("sk_a"))
+    b = sk.select(F.col("source").alias("source_b"), F.col("sk").alias("sk_b"))
+    inter = F.theta_sketch_estimate(F.theta_intersection("sk_a", "sk_b"))
+    return a.join(F.broadcast(b), F.col("source_a") != F.col("source_b")).select(
+        "source_a",
+        "source_b",
+        (inter / F.theta_sketch_estimate("sk_a")).alias("share_est"),
+    )
 
 
 def q_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`source_overlap` through the per-source KMV trigram sketch
-    (textops/kmv.py) — the 100 TB path where the exact distinct
+    """`source_overlap` through per-source theta sketches of the trigram
+    set (_theta_containment) — the 100 TB path where the exact distinct
     (source, trigram) relation is too large to shuffle per audit.
 
     Gate pattern (as slow_distinct_sketch): the EXACT overlap columns
     hash-compare against the independent DuckDB oracle, and the sketch's
-    containment estimate must land within `_KMV_BAND` of the exact share —
-    the boolean flips if the estimator drifts outside its guarantee.  The
-    sketch side never touches the exact plan: per-doc trigram hashes ->
-    bounded per-partition bottom-k partials -> one partial-merge groupBy ->
-    |sources|^2 pairwise sketch math."""
-    from mysql_log_parser_spark.textops.kmv import (
-        kmv_pairwise_containment,
-        kmv_sketch_per_key,
-        md5_48,
-    )
+    containment estimate must land within `_THETA_BAND` of the exact share
+    — the boolean flips if the estimator drifts outside its guarantee."""
     from mysql_log_parser_spark.textops.quality import words_of
 
     d = _docs(spark, sf_dir).select(
         "source", words_of(F.col("text")).alias("ws")
     ).where(F.size("ws") >= 3)
-    tris = _word_trigrams()
-    hashed = d.select(
-        "source", F.transform(tris, lambda t: md5_48(t)).alias("hs")
-    )
-    sketches = kmv_sketch_per_key(hashed, "source", "hs", _KMV_K)
-    est = kmv_pairwise_containment(sketches, _KMV_K).select(
-        F.col("key_a").alias("source_a"),
-        F.col("key_b").alias("source_b"),
-        "share_est",
+    est = _theta_containment(
+        d.select("source", F.explode(_word_trigrams()).alias("tri"))
     )
     # band check against the floored permille: the <=0.001 quantization is
     # negligible next to the 0.2 band
@@ -2033,7 +2005,7 @@ def q_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "share_permille",
             (
                 F.abs(F.col("share_est") - F.col("share_permille") / 1000.0)
-                <= _KMV_BAND
+                <= _THETA_BAND
             ).alias("sketch_in_band"),
         )
     )
@@ -2431,18 +2403,21 @@ _WNP_W = 8
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc digest of the winnowed fingerprint set (Schleimer et al.
-    2003; textops/winnow.py).  Gated through the PRODUCTION arrow kernel
-    (per-doc-local numpy selection, zero shuffle before the groupBy — the
-    heavy_hitters precedent of gating a kernel against an exact SQL
-    oracle); the catalyst twin is parity-tested in tests/test_winnow.py.
+    2003; textops/winnow.py).  Gated through the PRODUCTION kernel with
+    the md5 gram hash (per-doc-local numpy selection, zero shuffle before
+    the groupBy — the heavy_hitters precedent of gating a kernel against
+    an exact SQL oracle).
     The digest (count + fp/pos sums) pins both the selected hash VALUES
     and the rightmost-min POSITIONS without shipping 60k rows through
     the gate."""
-    from mysql_log_parser_spark.textops.winnow import winnow_fingerprints
+    from mysql_log_parser_spark.textops.winnow import (
+        gram_hashes_md5,
+        winnow_fingerprints,
+    )
 
     fps = winnow_fingerprints(
         _docs(spark, sf_dir).select("doc_id", "text"),
-        k=_WN_K, w=_WN_W, kernel="arrow",
+        k=_WN_K, w=_WN_W, hash_fn=gram_hashes_md5,
     )
     return fps.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_fp"),
@@ -2502,7 +2477,10 @@ def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join on fp -> pair count.  Never an all-pairs product; the join
     key is the fingerprint, whose per-key width is bounded by the cap.
     """
-    from mysql_log_parser_spark.textops.winnow import winnow_fingerprints
+    from mysql_log_parser_spark.textops.winnow import (
+        gram_hashes_md5,
+        winnow_fingerprints,
+    )
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
     # injected ids are NEGATIVE (-(id+1)): structurally collision-free with
@@ -2514,7 +2492,9 @@ def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" zzz qqq winnow tail")).alias("text"),
     )
     fps = (
-        winnow_fingerprints(d.unionByName(mut), k=_WNP_K, w=_WNP_W, kernel="arrow")
+        winnow_fingerprints(
+            d.unionByName(mut), k=_WNP_K, w=_WNP_W, hash_fn=gram_hashes_md5
+        )
         .select("doc_id", "fp")
         .distinct()
     )

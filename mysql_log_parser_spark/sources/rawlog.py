@@ -36,7 +36,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_BOUNDARY = b"# Time:"
+#: every event starts on a line with this prefix; chunks snap to it
+BOUNDARY = b"# Time:"
+#: bytes per store round trip when streaming a gzip member (_StoreRangeFile)
+_READ_BUF_BYTES = 4 << 20
 
 
 class PosixLogStore:
@@ -80,15 +83,12 @@ class _StoreRangeFile:
     an unbuffered pass-through would issue one store round-trip (file
     open/seek or object-store range GET) per 8 KiB of compressed data —
     ~131k GETs for a 1 GB member.  Each store call here fetches
-    `buf_bytes` (4 MiB default) and serves gzip from memory, so round
-    trips scale with compressed size / 4 MiB."""
+    `_READ_BUF_BYTES` (4 MiB) and serves gzip from memory, so round trips
+    scale with compressed size / 4 MiB."""
 
-    _BUF_BYTES = 4 << 20
-
-    def __init__(self, store, path: str, size: int, buf_bytes: int | None = None):
+    def __init__(self, store, path: str, size: int):
         self._store, self._path, self._size, self._pos = store, path, size, 0
         self._buf = b""
-        self._buf_bytes = buf_bytes or self._BUF_BYTES
 
     def read(self, n: int = -1) -> bytes:
         if n is None or n < 0:
@@ -96,7 +96,7 @@ class _StoreRangeFile:
         if n <= 0:
             return b""
         if len(self._buf) < n and self._pos < self._size:
-            fetch = max(n - len(self._buf), self._buf_bytes)
+            fetch = max(n - len(self._buf), _READ_BUF_BYTES)
             fetch = min(fetch, self._size - self._pos)
             got = self._store.read_range(self._path, self._pos, fetch)
             self._pos += len(got)
@@ -112,7 +112,7 @@ class _StoreRangeFile:
 
 
 def _gz_stream_docs(
-    store, path: str, size: int, doc_bytes: int, slack: int, boundary: bytes
+    store, path: str, size: int, doc_bytes: int, slack: int
 ) -> Iterator[tuple[int, bytes]]:
     """Stream-decompress a gzip member into event-boundary-snapped docs of
     ~doc_bytes, yielding (decompressed_offset, doc_bytes_chunk).
@@ -137,7 +137,7 @@ def _gz_stream_docs(
         if piece:
             pending += piece
             while len(pending) >= doc_bytes:
-                offs = _boundary_offsets(pending, boundary, include_zero=False)
+                offs = _boundary_offsets(pending, include_zero=False)
                 if not offs:
                     break
                 # largest boundary <= doc_bytes keeps docs ~doc_bytes; if
@@ -167,13 +167,13 @@ def _gz_stream_docs(
             return
 
 
-def _boundary_offsets(buf: bytes, boundary: bytes, include_zero: bool) -> list[int]:
-    """Offsets of lines starting with `boundary` within buf (line starts
+def _boundary_offsets(buf: bytes, include_zero: bool) -> list[int]:
+    """Offsets of lines starting with BOUNDARY within buf (line starts
     only: position 0 when requested, else the byte after a newline)."""
     offs = []
-    if include_zero and buf.startswith(boundary):
+    if include_zero and buf.startswith(BOUNDARY):
         offs.append(0)
-    needle = b"\n" + boundary
+    needle = b"\n" + BOUNDARY
     i = 0
     while True:
         j = buf.find(needle, i)
@@ -203,7 +203,6 @@ def read_raw_docs(
     path: str | list[str],
     chunk_bytes: int = 64 << 20,
     overlap: int = 1 << 20,
-    boundary: bytes = DEFAULT_BOUNDARY,
     source: str | None = None,
     store: PosixLogStore | None = None,
 ) -> DataFrame:
@@ -275,7 +274,7 @@ def read_raw_docs(
                     for j, (dbase, dbuf) in enumerate(
                         _gz_stream_docs(
                             store, r.path, sizes[r.path], chunk_bytes,
-                            overlap, boundary,
+                            overlap,
                         )
                     ):
                         rows.append(
@@ -295,7 +294,7 @@ def read_raw_docs(
                 )
                 chunk_len = r.end - r.start
                 at_eof = (r.start - prefix) + len(buf) >= sizes[r.path]
-                offs = _boundary_offsets(buf, boundary, include_zero=r.start == 0)
+                offs = _boundary_offsets(buf, include_zero=r.start == 0)
                 # positions relative to r.start
                 offs = [o - prefix for o in offs if o >= prefix]
                 if r.start == 0:

@@ -188,14 +188,3 @@ class TokensTable:
         if not picked:
             return self.spark.createDataFrame([], TOKENS_SCHEMA)
         return self.spark.read.schema(TOKENS_SCHEMA).parquet(*picked)
-
-    def validate_roundtrip(self, sample: int = 100) -> bool:
-        """Per-row token-array invariant: tokens decode to text and re-encode
-        identically (vocab 0..255)."""
-        df = self.read().limit(sample)
-        bad = df.where(
-            (F.array_min("tokens") < 0)
-            | (F.array_max("tokens") > 255)
-            | (F.size("tokens") != F.col("n_tok"))
-        ).count()
-        return bad == 0

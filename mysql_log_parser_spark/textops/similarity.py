@@ -8,6 +8,13 @@
   cosine rerank.  The scale path: candidate generation shuffles bucket keys
   only.
 - Embedding-cosine near-dup pairs: same kernels, pair output.
+- Nearest-centroid cells (IVF, k-means, SemDeDup): `centroid_dots` and
+  `with_nearest_centroid`, which every centroid gate calls.
+
+Centroid cells and hyperplane signatures each come as a kernel pair: a
+Catalyst nested-literal fold that the DuckDB oracles replay in plain SQL,
+and an Arrow matmul (`*_arrow`) that takes over past ~8k literals, where
+a literal tree stops being viable.
 """
 
 from __future__ import annotations

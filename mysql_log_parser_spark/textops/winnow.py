@@ -8,20 +8,15 @@ substring of length >= k + w - 1 yields at least one shared fingerprint
 2/(w+1) — the standard building block for substring-level dup mining
 and plagiarism-style containment checks over a training corpus.
 
-Spark shapes (same kernel-pair contract as textops/pq.py and the
-centroid/hyperplane kernels in textops/similarity.py):
-
-- ``kernel='arrow'`` (the production default): one ``mapInPandas`` pass;
-  each doc's k-gram hashes, sliding-window min, and per-doc dedup happen
-  locally in numpy, so the operator emits ~2·n/(w+1) rows per doc with
-  ZERO shuffle before any downstream aggregation.  This is the 100 TB
-  shape — fingerprint selection is embarrassingly per-doc.
-- ``kernel='catalyst'`` (the oracle-mirror form): explode one row per
-  k-gram position, window min over (doc_id ORDER BY pos), distinct.
-  DuckDB replays it digit-for-digit (entry_queries_textops), but the
-  explode is one row PER CHARACTER — at corpus scale that shuffle is the
-  reason the arrow kernel is the default.  Both kernels are
-  parity-tested for identical output (tests/test_winnow.py).
+Spark shape: one ``mapInPandas`` pass; each doc's k-gram hashes,
+sliding-window min and per-doc dedup happen locally in numpy, so the
+operator emits ~2·n/(w+1) rows per doc with ZERO shuffle before any
+downstream aggregation.  This is the 100 TB shape — fingerprint selection
+is embarrassingly per-doc.  The gram hash is a parameter: the vectorized
+rolling hash (``gram_hashes_fast``) by default, or the md5 hash
+(``gram_hashes_md5``) that the DuckDB oracles replay digit-for-digit with
+an explode + window-min query (entry_queries_textops).  The pure-python
+reference replay in tests/test_winnow.py checks the kernel's selection.
 
 Engine portability: hashes are the first 8 hex digits of md5 over the
 RAW k-gram (no lowercasing — unicode case-folding is the one spot the
@@ -39,8 +34,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 #: position slots per hash in the combined bigint encoding; docs must be
 #: shorter than this many characters (1 MiB of text) or the guard fires.
@@ -49,59 +43,6 @@ POSCAP = 1 << 20
 #: defaults: guarantee threshold t = K + W - 1 = 8 shared characters.
 K = 5
 W = 4
-
-
-def _combined(h: F.Column, pos: F.Column) -> F.Column:
-    """min(combined) == (min hash, rightmost position): the position is
-    stored complemented so larger pos sorts smaller within equal hashes."""
-    return h * F.lit(POSCAP) + (F.lit(POSCAP - 1) - pos)
-
-
-def winnow_fingerprints_catalyst(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = K, w: int = W,
-) -> DataFrame:
-    """Explode + window-min form — one row per character position, so it
-    shuffles the whole corpus by doc_id; exists as the SQL-mirrorable
-    parity twin of the arrow kernel."""
-    t = F.col(text_col)
-    guarded = F.when(F.length(t) < POSCAP, t).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("winnow: doc "),
-                F.col(id_col).cast("string"),
-                F.lit(f" is >= {POSCAP} chars; POSCAP position encoding "
-                      "would alias — split the doc or raise POSCAP"),
-            )
-        )
-    )
-    base = docs.where(F.length(t) >= k + w - 1).select(
-        F.col(id_col),
-        guarded.alias("_txt"),
-        (F.length(t) - k + 1).alias("_npos"),
-    )
-    pos = base.select(
-        id_col, "_npos", "_txt",
-        F.explode(F.sequence(F.lit(1), F.col("_npos"))).alias("i"),
-    )
-    h = F.conv(
-        F.substring(F.md5(F.substring(F.col("_txt"), F.col("i"), F.lit(k))), 1, 8),
-        16, 10,
-    ).cast("long")
-    win = (
-        Window.partitionBy(id_col).orderBy("i")
-        .rowsBetween(Window.currentRow, w - 1)
-    )
-    sel = (
-        pos.withColumn("c", _combined(h, F.col("i")))
-        .withColumn("sel", F.min("c").over(win))
-        .where(F.col("i") <= F.col("_npos") - (w - 1))
-    )
-    return sel.select(
-        id_col,
-        F.expr(f"sel DIV {POSCAP}").alias("fp"),
-        (F.lit(POSCAP - 1) - F.col("sel") % POSCAP).alias("pos"),
-    ).distinct()
 
 
 def gram_hashes_md5(txt: str, k: int, npos: int):
@@ -131,18 +72,17 @@ _FAST_MIX = 0x9E3779B97F4A7C15
 def gram_hashes_fast(txt: str, k: int, npos: int):
     """Production gram hash: vectorized polynomial rolling hash over the
     doc's codepoint array — O(k) numpy passes of length npos, ZERO Python
-    calls per position (the md5 kernel does npos interpreter round-trips,
+    calls per position (the md5 hash does npos interpreter round-trips,
     which is the throughput cliff VERDICT r4 flagged).
 
     h(i) = (sum_j cp[i+j] * BASE^(k-1-j)  mod 2^64) mixed by the
     golden-ratio multiplier and truncated to the top 32 bits, so the value
     range (and therefore the POSCAP combined encoding) is identical to the
-    md5 kernel's 32-bit space.  Codepoints come from the UTF-32 encoding of
+    md5 hash's 32-bit space.  Codepoints come from the UTF-32 encoding of
     the text — one element per character, so positions mean the same thing
-    as the md5 kernel's character slices (a UTF-8 byte view would drift on
-    multibyte text).  Not engine-portable SQL (no md5): the md5 kernel
-    remains the oracle/gate path; selection downstream is byte-identical
-    (shared _select_fingerprints)."""
+    as the md5 hash's character slices (a UTF-8 byte view would drift on
+    multibyte text).  Not engine-portable SQL (no md5): the md5 hash
+    remains the oracle/gate path."""
     import numpy as np
 
     cp = np.frombuffer(txt.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
@@ -154,38 +94,23 @@ def gram_hashes_fast(txt: str, k: int, npos: int):
     return h.astype(np.int64)
 
 
-def _select_fingerprints(hs, pos0: int, w: int):
-    """The winnowing selection itself, shared by every kernel: combined
-    bigint encode (min hash, rightmost position wins ties), vectorized
-    sliding-window min, per-doc dedup.  `hs` is the int64 gram-hash array
-    for positions pos0..pos0+len(hs)-1 (1-based); returns (fp, pos) int64
-    arrays.  Parity-tested with injected hashes (tests/test_winnow.py) so
-    the tie/dedup semantics cannot drift between kernels."""
-    import numpy as np
-
-    npos = len(hs)
-    c = hs * POSCAP + (
-        POSCAP - 1 - np.arange(pos0, pos0 + npos, dtype=np.int64)
-    )
-    sel = np.unique(np.lib.stride_tricks.sliding_window_view(c, w).min(axis=1))
-    return sel // POSCAP, POSCAP - 1 - (sel % POSCAP)
-
-
-def _select_fingerprints_fast(c, w: int):
-    """Sort-free winnowing selection over one doc's combined array: w-1
-    pairwise-minimum passes (the sliding-window min, all in-place) then a
-    consecutive-RUN dedup instead of np.unique's O(n log n) sort.
+def _select_fingerprints(hs, w: int):
+    """The winnowing selection for one doc: combined bigint encode (min
+    hash, rightmost position wins ties), w-1 in-place pairwise-minimum
+    passes for the sliding-window min, then a consecutive-RUN dedup.
+    `hs` is the int64 gram-hash array for positions 1..len(hs); returns
+    distinct (fp, pos) int64 arrays.
 
     Correctness of run-dedup: the minima sequence can repeat a combined
     value v = (hash, pos) only CONTIGUOUSLY — any two selecting windows
     s1 < s3 both lie in [pos-w+1, pos] (width w), so any s2 between them
     is covered by windows s1 ∪ s3 whose elements are all >= v, hence
-    m[s2] = v too.  So "keep where value != previous value" is exactly
-    the per-doc distinct the md5 kernel computes with np.unique —
-    parity-tested in tests/test_winnow.py.  Returns the selected combined
-    values (unsorted; distinct)."""
+    m[s2] = v too.  So "keep where value != previous value" is exactly the
+    per-doc distinct, with no sort — checked against the paper's literal
+    definition in tests/test_winnow.py."""
     import numpy as np
 
+    c = hs * POSCAP + (POSCAP - 1 - np.arange(1, len(hs) + 1, dtype=np.int64))
     n = len(c) - w + 1
     mm = c[:n].copy()
     for j in range(1, w):
@@ -193,16 +118,23 @@ def _select_fingerprints_fast(c, w: int):
     keep = np.empty(n, dtype=bool)
     keep[0] = True
     np.not_equal(mm[1:], mm[:-1], out=keep[1:])
-    return mm[keep]
+    sel = mm[keep]
+    return sel // POSCAP, POSCAP - 1 - (sel % POSCAP)
 
 
-def _winnow_map(docs, text_col, id_col, k, w, per_doc):
-    """Shared mapInPandas loop for the per-doc winnowing kernels: the null
-    skip, POSCAP guard, npos < w skip, empty-batch id-dtype handling and
-    output assembly live ONCE (they drifted between the md5 and fast
-    kernels before — the empty-batch Arrow-dtype fix had to be applied
-    twice); ``per_doc(txt, npos) -> (fp, pos)`` int64 arrays supplies the
-    kernel-specific hash + selection."""
+def winnow_fingerprints(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+    k: int = K, w: int = W, hash_fn=gram_hashes_fast,
+) -> DataFrame:
+    """Distinct winnowed fingerprints, one row per selected (doc, pos, fp).
+
+    ``hash_fn(txt, k, npos)`` -> int64 array of gram hashes:
+    gram_hashes_fast (the default; 8.8x the md5 hash's single-core
+    hash+select throughput on sf0.1, bench_winnow.py) or
+    gram_hashes_md5 (the engine-portable hash the gates and their DuckDB
+    oracles pin).  Fingerprint VALUES differ between the two (different
+    hash families — both uniform 32-bit); selection, density 2/(w+1) and
+    the shared-substring guarantee are the same."""
     import numpy as np
     import pandas as pd
 
@@ -233,7 +165,7 @@ def _winnow_map(docs, text_col, id_col, k, w, per_doc):
                 npos = n - k + 1
                 if npos < w:
                     continue
-                fp, pos = per_doc(txt, npos)
+                fp, pos = _select_fingerprints(hash_fn(txt, k, npos), w)
                 ids.extend([did] * len(fp))
                 fps.append(fp)
                 poss.append(pos)
@@ -251,70 +183,3 @@ def _winnow_map(docs, text_col, id_col, k, w, per_doc):
             })
 
     return docs.select(id_col, text_col).mapInPandas(gen, out_schema)
-
-
-def winnow_fingerprints_arrow(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = K, w: int = W, hash_fn=None,
-) -> DataFrame:
-    """Per-doc numpy kernel: gram hashing (``hash_fn(txt, k, npos)`` ->
-    int64 array; defaults to the md5 gate hash) + the shared vectorized
-    sliding-window-min selection + per-doc dedup inside one mapInPandas
-    batch — zero shuffle."""
-    hash_fn = hash_fn or gram_hashes_md5
-
-    def per_doc(txt: str, npos: int):
-        return _select_fingerprints(hash_fn(txt, k, npos), 1, w)
-
-    return _winnow_map(docs, text_col, id_col, k, w, per_doc)
-
-
-def winnow_fingerprints_fast(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = K, w: int = W,
-) -> DataFrame:
-    """Production kernel: rolling-polynomial gram hash (gram_hashes_fast,
-    zero Python calls per position) + sort-free selection
-    (_select_fingerprints_fast: in-place pairwise sliding mins + run-dedup
-    instead of np.unique's sort) — measured 12.4x the md5 kernel's
-    single-core hash+select throughput (BENCH.md r5, bench_winnow.py).
-    Same shared per-batch loop as the md5 kernel (_winnow_map)."""
-    import numpy as np
-
-    def per_doc(txt: str, npos: int):
-        hs = gram_hashes_fast(txt, k, npos)
-        c = hs * POSCAP + (
-            POSCAP - 1 - np.arange(1, npos + 1, dtype=np.int64)
-        )
-        sel = _select_fingerprints_fast(c, w)
-        return sel // POSCAP, POSCAP - 1 - (sel % POSCAP)
-
-    return _winnow_map(docs, text_col, id_col, k, w, per_doc)
-
-
-def winnow_fingerprints(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = K, w: int = W, kernel: str = "auto",
-) -> DataFrame:
-    """Distinct winnowed fingerprints, one row per selected (doc, pos, fp).
-
-    Kernels (selection semantics identical — parity-tested):
-    - 'fast' (= 'auto'): vectorized numpy rolling polynomial hash +
-      sort-free run-dedup selection — the production path (12.4x the md5
-      kernel's single-core hash+select throughput, BENCH.md r5 /
-      bench_winnow.py).
-    - 'arrow': md5 gram hash, per-doc selection — the gate/oracle path
-      (DuckDB replays the md5 values digit-for-digit), and the hash the
-      dup-mining gates pin.
-    - 'catalyst': explode + window-min SQL-mirrorable twin of 'arrow' for
-      the parity test.
-    Fingerprint VALUES differ between 'fast' and 'arrow' (different hash
-    families — both uniform 32-bit); selection semantics, density 2/(w+1),
-    and the shared-substring guarantee are identical."""
-    if kernel == "auto":
-        kernel = "fast"
-    if kernel == "fast":
-        return winnow_fingerprints_fast(docs, text_col, id_col, k, w)
-    if kernel == "arrow":
-        return winnow_fingerprints_arrow(docs, text_col, id_col, k, w)
-    return winnow_fingerprints_catalyst(docs, text_col, id_col, k, w)

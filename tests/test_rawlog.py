@@ -244,7 +244,7 @@ def test_gzip_member_streams_into_bounded_subdocs(spark, tmp_path):
     # sub-doc split is bounded and lossless at the byte level
     docs = list(
         _gz_stream_docs(
-            PosixLogStore(), str(gz), gz.stat().st_size, 1 << 10, 4096, b"# Time:"
+            PosixLogStore(), str(gz), gz.stat().st_size, 1 << 10, 4096
         )
     )
     assert len(docs) > 1, "member did not split into multiple sub-docs"
@@ -279,7 +279,7 @@ def test_gzip_member_streams_into_bounded_subdocs(spark, tmp_path):
     with pytest.raises(ValueError, match="exceeds chunk_bytes"):
         list(
             _gz_stream_docs(
-                PosixLogStore(), str(gz2), gz2.stat().st_size, 512, 1024, b"# Time:"
+                PosixLogStore(), str(gz2), gz2.stat().st_size, 512, 1024
             )
         )
 

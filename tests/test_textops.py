@@ -552,62 +552,22 @@ def test_bpe_train_sampled_parity_and_sampling(spark):
     assert out[1] == [97, 98, 97, 98, 99]  # untouched: pair absent
 
 
-def test_kmv_sketch_exact_below_k_and_partition_invariant(spark):
-    """A KMV sketch over fewer than k distinct hashes IS the distinct hash
-    set (sorted) — and the two-level partial merge must yield the identical
-    sketch regardless of how rows are partitioned (bottom-k of unioned
-    bottom-k partials = bottom-k of the union)."""
-    from mysql_log_parser_spark.textops.kmv import kmv_sketch_per_key
+def test_theta_containment_estimates_and_plan(spark):
+    """Theta sketches below their nominal entries are exact: containment
+    of a (subset) in b (superset) must be exactly 1.0, the reverse the
+    true ratio; the pairwise stage must broadcast and contain no Python
+    eval."""
+    from mysql_log_parser_spark.entry_queries_textops import _theta_containment
 
-    rows = [
-        ("a", [5, 1, 9, 1]),
-        ("a", [7, 5]),
-        ("b", [2, 2, 8]),
-        ("b", []),
-    ]
-    df = spark.createDataFrame(rows, "source string, hs array<long>")
-
-    def sketch_of(n_parts):
-        return {
-            r["source"]: list(r["sketch"])
-            for r in kmv_sketch_per_key(
-                df.repartition(n_parts), "source", "hs", k=256
-            ).collect()
-        }
-
-    one = sketch_of(1)
-    assert one == {"a": [1, 5, 7, 9], "b": [2, 8]}
-    assert sketch_of(4) == one
-
-    # truncation to k: the k smallest survive
-    small = {
-        r["source"]: list(r["sketch"])
-        for r in kmv_sketch_per_key(df, "source", "hs", k=2).collect()
-    }
-    assert small == {"a": [1, 5], "b": [2, 8]}
-
-
-def test_kmv_containment_estimates_and_plan(spark):
-    """Below-k sketches make every KMV estimator exact: containment of
-    a (subset) in b (superset) must be exactly 1.0, the reverse the true
-    ratio; the pairwise stage must broadcast and contain no Python eval."""
-    from mysql_log_parser_spark.textops.kmv import (
-        kmv_pairwise_containment,
-        kmv_sketch_per_key,
+    rows = [("a", str(i)) for i in range(10)] + [("b", str(i)) for i in range(40)]
+    out = _theta_containment(
+        spark.createDataFrame(rows, "source string, tri string")
     )
-
-    rows = [("a", list(range(10))), ("b", list(range(40)))]
-    df = spark.createDataFrame(rows, "source string, hs array<long>")
-    sk = kmv_sketch_per_key(df, "source", "hs", k=64)
-    out = kmv_pairwise_containment(sk, 64)
-    got = {(r["key_a"], r["key_b"]): r for r in out.collect()}
-    ab = got[("a", "b")]
-    assert ab["share_est"] == 1.0 and ab["a_est"] == 10.0 and ab["union_est"] == 40.0
-    ba = got[("b", "a")]
-    assert ba["share_est"] == 0.25 and ba["jaccard_est"] == 0.25
+    got = {(r["source_a"], r["source_b"]): r["share_est"] for r in out.collect()}
+    assert got == {("a", "b"): 1.0, ("b", "a"): 0.25}
 
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan.replace("ArrowEvalPython", ""), plan
+    assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
@@ -625,7 +585,6 @@ def test_ngram_novelty_sketch_prunes_and_stays_in_band(spark):
         _word_trigrams,
         q_ngram_novelty_sketch,
     )
-    from mysql_log_parser_spark.textops.kmv import md5_48
     from mysql_log_parser_spark.textops.quality import words_of
 
     sf = "/root/testdata/sf0.001"
@@ -645,7 +604,8 @@ def test_ngram_novelty_sketch_prunes_and_stays_in_band(spark):
     )
     tris = d.select(F.explode(_word_trigrams()).alias("tri"))
     total = tris.count()
-    sampled = tris.where(md5_48(F.col("tri")) < F.lit(_NOV_THRESHOLD)).count()
+    h48 = F.conv(F.substring(F.md5("tri"), 1, 12), 16, 10).cast("long")
+    sampled = tris.where(h48 < F.lit(_NOV_THRESHOLD)).count()
     # RATE=0.25 of the value space; occurrence share drifts with skew but
     # must be well under half and nonzero for the path to mean anything
     assert 0 < sampled < 0.5 * total, (sampled, total)

@@ -1,7 +1,7 @@
-"""Winnowing fingerprints (textops/winnow.py): kernel parity, equality
-against an independent pure-python reference, the paper's local guarantee
-(shared substring >= k+w-1 chars -> shared fingerprint), the POSCAP guard,
-and plan shape."""
+"""Winnowing fingerprints (textops/winnow.py): equality against an
+independent pure-python reference for both gram hashes, the paper's local
+guarantee (shared substring >= k+w-1 chars -> shared fingerprint),
+density, the POSCAP guard, and plan shape."""
 
 import hashlib
 import os
@@ -14,6 +14,7 @@ from mysql_log_parser_spark.textops.winnow import (
     K,
     POSCAP,
     W,
+    gram_hashes_md5,
     winnow_fingerprints,
 )
 
@@ -52,24 +53,23 @@ def docs(spark):
     return spark.createDataFrame(texts, ["doc_id", "text"])
 
 
-def test_matches_reference_both_kernels(spark, docs):
+def test_matches_reference(spark, docs):
     want = {
         (did, fp, pos)
         for did, txt in docs.collect()
         for pos, fp in _ref_winnow(txt)
     }
-    for kernel in ("catalyst", "arrow"):
-        got = {
-            (r["doc_id"], r["fp"], r["pos"])
-            for r in winnow_fingerprints(docs, kernel=kernel).collect()
-        }
-        assert got == want, kernel
+    got = {
+        (r["doc_id"], r["fp"], r["pos"])
+        for r in winnow_fingerprints(docs, hash_fn=gram_hashes_md5).collect()
+    }
+    assert got == want
 
 
 def test_local_guarantee_shared_substring(spark, docs):
     """Docs 1 and 5 share a long prefix -> winnowing MUST surface shared
     fingerprints (the property simhash/minhash don't give per-substring)."""
-    fps = winnow_fingerprints(docs, kernel="arrow").collect()
+    fps = winnow_fingerprints(docs, hash_fn=gram_hashes_md5).collect()
     by_doc = {}
     for r in fps:
         by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
@@ -79,13 +79,21 @@ def test_local_guarantee_shared_substring(spark, docs):
     assert len(by_doc[3]) == 1  # single window -> single fingerprint
 
 
-def test_kernel_parity_on_corpus(spark):
+def test_matches_reference_on_corpus(spark):
+    """The md5-hash kernel equals the pure-python reference replay on
+    every doc of the sf0.01 corpus, and emits each row once."""
     if not os.path.isdir(SF):
         pytest.skip("driver testdata not available")
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    a = {tuple(r) for r in winnow_fingerprints(d, kernel="catalyst").collect()}
-    b = {tuple(r) for r in winnow_fingerprints(d, kernel="arrow").collect()}
-    assert a == b and len(a) > 0
+    want = {
+        (did, fp, pos)
+        for did, txt in d.collect()
+        for pos, fp in _ref_winnow(txt)
+    }
+    rows = winnow_fingerprints(d, hash_fn=gram_hashes_md5).collect()
+    got = {tuple(r) for r in rows}
+    assert got == want and len(got) > 0
+    assert len(rows) == len(got)
 
 
 def test_density(spark):
@@ -95,7 +103,7 @@ def test_density(spark):
         pytest.skip("driver testdata not available")
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     row = (
-        winnow_fingerprints(d, kernel="arrow")
+        winnow_fingerprints(d, hash_fn=gram_hashes_md5)
         .agg(F.count(F.lit(1)).alias("n_fp"))
         .crossJoin(d.agg(F.sum(F.length("text") - K + 1).alias("n_pos")))
         .first()
@@ -107,25 +115,18 @@ def test_density(spark):
 def test_poscap_guard(spark):
     big = spark.createDataFrame([(1, "x" * POSCAP)], ["doc_id", "text"])
     with pytest.raises(Exception, match="POSCAP"):
-        winnow_fingerprints(big, kernel="arrow").collect()
-    with pytest.raises(Exception, match="POSCAP"):
-        winnow_fingerprints(big, kernel="catalyst").collect()
+        winnow_fingerprints(big, hash_fn=gram_hashes_md5).collect()
 
 
 def test_selection_parity_injected_hashes():
-    """The selection stage every kernel shares (_select_fingerprints):
-    with INJECTED hash arrays — including deliberate all-equal and
+    """The selection every gram hash feeds (_select_fingerprints): with
+    INJECTED hash arrays — including deliberate all-equal and
     repeated-min ties — it must pick exactly the positions the paper's
     literal definition picks (min hash, RIGHTMOST position on ties,
-    distinct).  Because 'fast' and 'arrow' differ only in the hash_fn fed
-    to this one function, selection semantics cannot drift between them."""
+    distinct), each once."""
     import numpy as np
 
-    from mysql_log_parser_spark.textops.winnow import (
-        POSCAP,
-        _select_fingerprints,
-        _select_fingerprints_fast,
-    )
+    from mysql_log_parser_spark.textops.winnow import _select_fingerprints
 
     cases = [
         np.array([5, 3, 3, 9, 1, 1, 1, 7], dtype=np.int64),
@@ -142,19 +143,14 @@ def test_selection_parity_injected_hashes():
                     if best is None or hs[j] < best or (hs[j] == best and j > best_pos):
                         best, best_pos = int(hs[j]), j
                 want.add((best, best_pos + 1))
-            got = set(zip(*(a.tolist() for a in _select_fingerprints(hs, 1, w))))
-            assert got == want, ("unique", hs.tolist(), w)
-            c = hs * POSCAP + (POSCAP - 1 - np.arange(1, len(hs) + 1, dtype=np.int64))
-            sel = _select_fingerprints_fast(c, w)
-            got_fast = {
-                (int(v) // POSCAP, POSCAP - 1 - int(v) % POSCAP) for v in sel
-            }
-            assert got_fast == want, ("run-dedup", hs.tolist(), w)
-            assert len(sel) == len(got_fast)  # distinct rows, no run missed
+            fp, pos = _select_fingerprints(hs, w)
+            got = set(zip(fp.tolist(), pos.tolist()))
+            assert got == want, (hs.tolist(), w)
+            assert len(fp) == len(got)  # distinct rows, no run missed
 
 
 def _ref_winnow_fast(text: str, k: int = K, w: int = W) -> set:
-    """Pure-python replay of the FAST kernel: same rolling polynomial hash
+    """Pure-python replay with the FAST gram hash: same rolling polynomial hash
     recomputed per position with Python big ints (mod 2^64), then the
     paper's literal selection — an implementation-independent check that
     the vectorized numpy arithmetic (wraparound, finalizer, truncation)
@@ -196,34 +192,11 @@ def test_fast_kernel_matches_python_replay(spark):
         for did, txt in texts
         for pos, fp in _ref_winnow_fast(txt)
     }
-    rows = winnow_fingerprints(docs, kernel="fast").collect()
+    rows = winnow_fingerprints(docs).collect()
     got = {(r["doc_id"], r["fp"], r["pos"]) for r in rows}
     assert got == want
-    # the batched run-dedup must emit DISTINCT rows, like np.unique does
+    # the batched run-dedup must emit DISTINCT rows
     assert len(rows) == len(got)
-
-
-def test_fast_selection_matches_unique_selection(spark):
-    """The sort-free run-dedup selection equals the np.unique selection
-    when fed the SAME fast hashes (winnow_fingerprints_arrow accepts an
-    injected hash_fn) — the cross-selection parity the two
-    implementations must keep on a real corpus."""
-    if not os.path.isdir(SF):
-        pytest.skip("driver testdata not available")
-    from mysql_log_parser_spark.textops.winnow import (
-        gram_hashes_fast,
-        winnow_fingerprints_arrow,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    a = {
-        tuple(r)
-        for r in winnow_fingerprints_arrow(
-            d, hash_fn=gram_hashes_fast
-        ).collect()
-    }
-    b = {tuple(r) for r in winnow_fingerprints(d, kernel="fast").collect()}
-    assert a == b and len(a) > 0
 
 
 def test_fast_kernel_guarantee_and_density(spark):
@@ -237,7 +210,7 @@ def test_fast_kernel_guarantee_and_density(spark):
         F.concat("text", F.lit(" zzz tail")).alias("text"),
     )
     corpus = d.unionByName(mut)
-    fps = winnow_fingerprints(corpus, kernel="fast")
+    fps = winnow_fingerprints(corpus)
     row = (
         fps.agg(F.count(F.lit(1)).alias("n_fp"))
         .crossJoin(corpus.agg(F.sum(F.length("text") - K + 1).alias("n_pos")))
@@ -261,14 +234,12 @@ def test_fast_kernel_guarantee_and_density(spark):
 def test_fast_kernel_poscap_guard(spark):
     big = spark.createDataFrame([(1, "x" * POSCAP)], ["doc_id", "text"])
     with pytest.raises(Exception, match="POSCAP"):
-        winnow_fingerprints(big, kernel="fast").collect()
+        winnow_fingerprints(big).collect()
 
 
 def test_plan_shape(spark, docs):
-    arrow = winnow_fingerprints(docs, kernel="arrow")
-    plan = arrow._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "BatchEvalPython" not in plan
-    # the arrow kernel emits final rows with NO exchange at all
-    assert "Exchange" not in plan
-    cat = winnow_fingerprints(docs, kernel="catalyst")
-    assert "BatchEvalPython" not in cat._jdf.queryExecution().executedPlan().toString()
+    for fps in (winnow_fingerprints(docs), winnow_fingerprints(docs, hash_fn=gram_hashes_md5)):
+        plan = fps._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan and "BatchEvalPython" not in plan
+        # the kernel emits final rows with NO exchange at all
+        assert "Exchange" not in plan
