@@ -43,14 +43,39 @@ def entry(spark: SparkSession) -> DataFrame:
     return class_digest(events(tokens_tbl), mode="sketch")
 
 
-# Entries without a CURRENT-round driver CORRECTNESS row enumerate FIRST:
-# the driver's per-round gate records the first ~50 queries() entries in
-# dict order, so (a) never-gated, (b) r02-row-only (VERDICT r4 "What's
-# missing" #1 — the 13-entry tail the r4 cap cut), and (c) entries whose
-# implementation changed after their r04 gate must lead; the cap's
-# remainder is filled with the OLDEST (r03-latest) rows so every entry's
-# driver row stays as fresh as 110 entries / 50-cap allows.
+# The per-round correctness gate records only the first 50 queries()
+# entries in dict order, so _VERIFY_FIRST (at most 50 names) decides which
+# entries get a fresh CORRECTNESS row: first the gates whose implementation
+# or oracle changed since their latest row, then the entries whose latest
+# row is the OLDEST (r03), then the most recently changed of the rest.
 _VERIFY_FIRST = [
+    # the chained BPE training gate: the production bpe_train_n loop
+    # against the full 8-round replay
+    "bpe_train8",
+    # r03-latest rows (gate-freshness rotation)
+    "stream_dedup",
+    "slow_user_sketch",
+    "slow_event_offsets",
+    "slow_rate_corrected",
+    "sequence_pack",
+    "pack_sequences",
+    "quality_filter",
+    "repetition_stats",
+    "pii_redact",
+    "decontaminate",
+    "decontaminate_shuffle",
+    "dedup_components",
+    "mix_upsample",
+    "token_budget",
+    "vocab_stats",
+    "curation_pipeline",
+    "token_id_topk",
+    "token_bigram_topk",
+    "seq_len_histogram",
+    "word_commonness",
+    "ngram_novelty",
+    "source_overlap",
+    "prefix_dup_groups",
     # gates whose implementation or oracle moved onto one textops kernel:
     # theta sketches, the single winnowing kernel, the production
     # with_nearest_centroid / centroid_dots / near_dup_pairs_cosine
@@ -70,62 +95,19 @@ _VERIFY_FIRST = [
     "ann_pq_recall_residual",
     "semantic_dedup",
     # gates whose implementation now calls the production class_digest /
-    # route_partitioned + sink_counts (gate-freshness rotation)
+    # route_partitioned + sink_counts
     "slow_example_select",
     "slow_example_ts",
     "slow_route_counts",
     "stream_route_counts",
     "stream_window_agg",
-    "stream_dedup",
     "slow_bucketed_join",
-    # (a) new this round, never driver-gated
+    # entries added or re-gated in round 5, filling the 50-entry cap
     "bpe_train_sampled",
     "incremental_lsh_append",
     "quality_calibrate",
     "dedup_exact_tokens",
-    # (b) r02-latest rows — the full 13 fit this round (VERDICT r4 item 3)
     "slow_global_sketch",
-    "stream_stateful_digest",
-    "text_quality",
-    "lang_id",
-    "token_stats",
-    "simhash_docs",
-    "ann_cosine_topk",
-    "dedup_exact",
-    "split_assign",
-    "stratified_sample",
-    # (c) implementation changed after their r04 gate (round-5 commits:
-    # skew-safe span counts, fast winnow kernel + negative injected ids,
-    # double-safe DSIR, bounded LSH caches + shared oracle builder,
-    # PQ encode routing + prenormed rerank + residual audit, snapshot-log
-    # prefix guard, sampled-BPE oracle builder param)
-    "dsir_weights",
-    "incremental_lsh_dedup",
-    "stream_lsh_dedup",
-    "dedup_substring",
-    "slow_snapshot_range",
-    "bpe_train8",
-    # (d) r03-latest rows, oldest first; module-touched ones lead
-    "tokens_roundtrip",       # tokens_table.py prefix guard touched the module
-    "slow_checkpoint_resume", # checkpoint/tokens source shared surface
-    "slow_parse_events",
-    "slow_class_agg",
-    "slow_global_agg",
-    "slow_enrich_team_agg",
-    "fingerprint_checksum",
-    "slow_stats_long",
-    "slow_top_classes",
-    "slow_histogram",
-    "slow_user_agg",
-    "slow_rate_limit_check",
-    "slow_admin_filter",
-    "multimodal_resize",
-    "slow_window_topk",
-    "slow_db_capture",
-    "slow_set_skip",
-    "slow_sliding_window",
-    "slow_user_sketch",
-    "slow_event_offsets",
 ]
 
 

@@ -17,9 +17,6 @@ Protocol:
    reference CLI's own throughput metric (bin/parser-cli.go:124-127).
 3. secondary timings: the driver-contract queries + global digest + routed
    fan-out write.
-
-Scaling protocol (local[8] vs local[32] on the SAME prepared input) lives in
-bench_scaling.py.
 """
 
 from __future__ import annotations
@@ -205,7 +202,7 @@ def main() -> None:
 
     # Structured Streaming leg: the SAME corpus through readStream -> parse
     # -> fingerprint -> routed sink (availableNow), one bounded run.
-    # Skipped in flagship-only mode (scaling legs time the batch pipeline).
+    # Skipped in flagship-only mode (SPARK_GRAFT_QUERIES=flagship).
     stream_sec = None
     if os.environ.get("SPARK_GRAFT_QUERIES", "all") != "flagship":
         import shutil

@@ -25,6 +25,9 @@ import argparse
 import sys
 import time
 
+# observe_events' counter names, reported as zeros for an event-free input
+_EVENT_COUNTERS = ("events", "qt_sum", "qt_max", "empty_fingerprints", "admin_events")
+
 
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
@@ -50,7 +53,7 @@ def main(argv: list[str] | None = None) -> None:
         "the digest span (the one class+global aggregation and both digest "
         "writes) timed inside the job after one untimed warmup "
         "materialization (bench.py's warm protocol; JVM/session startup and "
-        "per-worker warmup excluded) — bench_submit.py reads this",
+        "per-worker warmup excluded)",
     )
     args = ap.parse_args(argv)
     if args.raw_log and args.incremental:
@@ -125,7 +128,8 @@ def main(argv: list[str] | None = None) -> None:
             totals, F.count_if(F.col("is_global") == 1).alias("global_rows")
         ).localCheckpoint()
     )
-    if totals.get["global_rows"] == 0:
+    event_free = totals.get["global_rows"] == 0
+    if event_free:
         # an event-free input leaves the rollup without its grand-total
         # row: write global_digest's one row of zero counts instead (sketch
         # form in both modes; exact percentiles of nothing cannot be
@@ -157,8 +161,11 @@ def main(argv: list[str] | None = None) -> None:
                     "events_per_sec": round(total / bench_sec, 1),
                     "master": spark.sparkContext.master,
                     "parallelism": spark.sparkContext.defaultParallelism,
-                    # observed during the digest aggregation (no extra pass)
-                    "observed": {k: v for k, v in obs.get.items()},
+                    # observed during the digest aggregation (no extra pass);
+                    # an event-free run has no observed stage to read
+                    "observed": (
+                        dict.fromkeys(_EVENT_COUNTERS, 0) if event_free else obs.get
+                    ),
                 }
             )
         )

@@ -1264,73 +1264,6 @@ SELECT CAST(token AS INTEGER) AS token, n, CAST(rank AS BIGINT) AS rank FROM (
 TEXTOPS_QUERIES["heavy_hitters"] = (q_heavy_hitters, O_HEAVY_HITTERS)
 
 
-# -- 21. BPE merge step --------------------------------------------------------
-
-_BPE_NEW_ID = 256  # first id above the byte vocab
-
-
-def q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One distributed BPE training iteration (textops/bpe.py): pick the
-    top adjacent token pair corpus-wide (TakeOrderedAndProject; only the
-    winning pair crosses the driver), rewrite every sequence with the pair
-    collapsed to id 256 (Arrow kernel, greedy left-to-right — string-replace
-    semantics), and emit per-doc before/after lengths plus an md5 digest of
-    the merged id sequence so the oracle checks the REWRITE itself, not just
-    the counts.  The digest is JVM-side (transform + concat_ws + md5)."""
-    from mysql_log_parser_spark import entry_queries as EQ
-    from mysql_log_parser_spark.textops.bpe import bpe_merge_step
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", EQ.encode_tokens("text").alias("tokens")
-    )
-    merged = bpe_merge_step(d, new_id=_BPE_NEW_ID)
-    return merged.select(
-        "doc_id",
-        "n_before",
-        "n_after",
-        F.md5(
-            F.concat_ws(
-                ",", F.transform("tokens_merged", lambda t: t.cast("string"))
-            )
-        ).alias("merged_md5"),
-    )
-
-
-# The oracle replays the merge with DuckDB's replace(), which is exactly the
-# greedy non-overlapping left-to-right semantics of the kernel; chr(1) is a
-# safe placeholder (min corpus byte is 32, asserted in tests).  The winning
-# pair is derived independently from the text.
-O_BPE_MERGE_STEP = f"""
-WITH b AS (
-  SELECT unnest([unicode(text[i:i]) * 256 + unicode(text[i+1:i+1])
-                 for i in range(1, length(text))]) AS bigram
-  FROM documents WHERE length(text) >= 2
-), best AS (
-  SELECT bigram FROM (
-    SELECT bigram, count(*) AS n FROM b GROUP BY bigram
-    ORDER BY n DESC, bigram ASC LIMIT 1
-  )
-), m AS (
-  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_before,
-         replace(text,
-                 chr((SELECT bigram FROM best) // 256) ||
-                 chr((SELECT bigram FROM best) % 256),
-                 chr(1)) AS merged
-  FROM documents
-)
-SELECT doc_id, n_before, CAST(length(merged) AS BIGINT) AS n_after,
-       md5(array_to_string(
-         list_transform(list_filter(string_split(merged, ''), c -> c != ''),
-                        c -> CAST(CASE WHEN unicode(c) = 1
-                                       THEN {_BPE_NEW_ID}
-                                       ELSE unicode(c) END AS VARCHAR)),
-         ',')) AS merged_md5
-FROM m
-"""
-
-TEXTOPS_QUERIES["bpe_merge_step"] = (q_bpe_merge_step, O_BPE_MERGE_STEP)
-
-
 # -- 22. per-source sequence-length histogram ----------------------------------
 
 _SLH_WIDTH = 64
@@ -1395,88 +1328,7 @@ FROM g
 TEXTOPS_QUERIES["seq_len_histogram"] = (q_seq_len_histogram, O_SEQ_LEN_HISTOGRAM)
 
 
-# -- 23. two-iteration BPE training -------------------------------------------
-
-
-def q_bpe_train2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWO chained BPE iterations (pair -> id 256, then pair over the MERGED
-    corpus -> id 257) — the iterative-refinement twin of ann_kmeans_iter2:
-    each round's pair selection is a distributed top-1 whose single winning
-    row crosses the driver, and the intermediate corpus is persisted so the
-    round-2 selection and rewrite share one materialization instead of
-    re-running the round-1 kernel.  The oracle replays both rounds with
-    string replace()s and hash-compares the final id sequences, so a drift
-    anywhere in the chain (pair choice, overlap rule, id mapping) flips it."""
-    from mysql_log_parser_spark import entry_queries as EQ
-    from mysql_log_parser_spark.textops.bpe import bpe_merge_step
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", EQ.encode_tokens("text").alias("tokens")
-    )
-    m1 = (
-        bpe_merge_step(d, new_id=256)
-        .select("doc_id", F.col("tokens_merged").alias("tokens"))
-        .persist()
-    )
-    m2 = bpe_merge_step(m1, new_id=257)
-    return m2.select(
-        "doc_id",
-        F.col("n_before").alias("n1"),
-        F.col("n_after").alias("n2"),
-        F.md5(
-            F.concat_ws(
-                ",", F.transform("tokens_merged", lambda t: t.cast("string"))
-            )
-        ).alias("merged_md5"),
-    )
-
-
-O_BPE_TRAIN2 = """
-WITH best1 AS (
-  SELECT bigram FROM (
-    SELECT bigram, count(*) AS n FROM (
-      SELECT unnest([unicode(text[i:i])*256 + unicode(text[i+1:i+1])
-                     for i in range(1, length(text))]) AS bigram
-      FROM documents WHERE length(text) >= 2
-    ) GROUP BY bigram ORDER BY n DESC, bigram LIMIT 1)
-), m1 AS (
-  SELECT doc_id,
-         replace(text, chr((SELECT bigram FROM best1) // 256) ||
-                       chr((SELECT bigram FROM best1) % 256), chr(1)) AS t1
-  FROM documents
-), ids1 AS (
-  SELECT doc_id, t1,
-         list_transform(list_filter(string_split(t1, ''), c -> c != ''),
-                        c -> CASE WHEN unicode(c) = 1 THEN 256
-                                  ELSE unicode(c) END) AS l
-  FROM m1
-), best2 AS (
-  SELECT bg FROM (
-    SELECT bg, count(*) AS n FROM (
-      SELECT unnest([l[i]*512 + l[i+1] for i in range(1, len(l))]) AS bg
-      FROM ids1 WHERE len(l) >= 2
-    ) GROUP BY bg ORDER BY n DESC, bg LIMIT 1)
-), pat2 AS (
-  SELECT (CASE WHEN bg // 512 = 256 THEN chr(1) ELSE chr(bg // 512) END) ||
-         (CASE WHEN bg % 512 = 256 THEN chr(1) ELSE chr(bg % 512) END) AS p
-  FROM best2
-), m2 AS (
-  SELECT doc_id, CAST(length(t1) AS BIGINT) AS n1,
-         replace(t1, (SELECT p FROM pat2), chr(2)) AS t2
-  FROM ids1
-)
-SELECT doc_id, n1, CAST(length(t2) AS BIGINT) AS n2,
-       md5(array_to_string(
-         list_transform(list_filter(string_split(t2, ''), c -> c != ''),
-                        c -> CAST(CASE WHEN unicode(c) = 1 THEN 256
-                                       WHEN unicode(c) = 2 THEN 257
-                                       ELSE unicode(c) END AS VARCHAR)),
-         ',')) AS merged_md5
-FROM m2
-"""
-
-TEXTOPS_QUERIES["bpe_train2"] = (q_bpe_train2, O_BPE_TRAIN2)
-
+# -- 23. chained BPE training --------------------------------------------------
 
 _BPE_N = 8
 
@@ -1509,13 +1361,15 @@ def q_bpe_train8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o_bpe_train_n(n: int, sample_where: str | None = None) -> str:
-    """Chained-CTE DuckDB replay of n BPE rounds: the working text keeps
-    merged ids as sentinel chars (chr(i) <-> id 255+i, valid while the
-    corpus is ASCII — gated by the token_topk precondition test), each
-    round recomputes the id-list view, picks argmax bigram with the
-    (count desc, lead asc, next asc) tie-break via bg = lead*4096 + next,
-    and applies a non-overlapping global replace (the merge_one property
-    test pins Spark's kernel to exactly replace() semantics).
+    """Chained-CTE DuckDB replay of n BPE rounds, the one BPE training
+    oracle (bpe_train8, and bpe_train_sampled via `sample_where`): the
+    working text keeps merged ids as sentinel chars (chr(i) <-> id 255+i,
+    valid while the corpus is ASCII — gated by the token_topk precondition
+    test), each round recomputes the id-list view, picks argmax bigram
+    with top_bigram's (count desc, lead asc, next asc) tie-break via
+    bg = lead*4096 + next, and applies a non-overlapping global replace
+    (test_bpe_merge_matches_string_replace_semantics pins Spark's merge
+    kernel to exactly replace() semantics).
 
     `sample_where` (a doc_id predicate) restricts ONLY the per-round
     bigram argmax to the training sample; the replace still rewrites every
@@ -2485,8 +2339,7 @@ def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select("doc_id", "text")
     # injected ids are NEGATIVE (-(id+1)): structurally collision-free with
     # any non-negative corpus id at any corpus size (the char_diversity
-    # scheme — a +100000 offset collides once the corpus passes 100k docs,
-    # and bench_scaling already runs at that boundary).
+    # scheme — a +100000 offset collides once the corpus passes 100k docs).
     mut = d.where(F.col("doc_id") % 5 == 0).select(
         (-(F.col("doc_id") + 1)).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zzz qqq winnow tail")).alias("text"),
@@ -2630,8 +2483,7 @@ def _lsh_delta(d: DataFrame) -> DataFrame:
     {1, 2, 3} — so they are structurally collision-free with any
     non-negative corpus id AND with each other at any corpus size (the
     char_diversity negative-id scheme; the former +100000/+200000/+300000
-    offsets collide with real ids once the corpus passes 100k docs, the
-    exact boundary bench_scaling runs at):
+    offsets collide with real ids once the corpus passes 100k docs):
       -(4*id+1)  appended-tail near-copies of every 7th doc   -> must flag
       -(4*id+2)  md5-gibberish fresh docs (3 words, 1 shingle) -> must pass
       -(4*id+3)  single-md5-word docs (ZERO shingles)          -> exercises

@@ -138,7 +138,7 @@ def bpe_train_n(
     first_id: int = 256,
 ) -> tuple[DataFrame, list[dict]]:
     """N chained BPE training rounds — the operator a real tokenizer-
-    training pipeline ships (bpe_merge_step/bpe_train2 are its gates).
+    training pipeline ships (the bpe_train8 gate replays all 8 rounds).
 
     Each round: distributed top-1 pair selection (partial agg ->
     TakeOrderedAndProject, ONE row crosses the driver) then the Arrow-

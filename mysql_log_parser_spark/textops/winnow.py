@@ -130,7 +130,7 @@ def winnow_fingerprints(
 
     ``hash_fn(txt, k, npos)`` -> int64 array of gram hashes:
     gram_hashes_fast (the default; 8.8x the md5 hash's single-core
-    hash+select throughput on sf0.1, bench_winnow.py) or
+    hash+select throughput on sf0.1, recorded in CHANGES.md) or
     gram_hashes_md5 (the engine-portable hash the gates and their DuckDB
     oracles pin).  Fingerprint VALUES differ between the two (different
     hash families — both uniform 32-bit); selection, density 2/(w+1) and

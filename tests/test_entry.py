@@ -91,6 +91,9 @@ def test_entry_smoke(spark):
 
 def test_verify_first_names_are_entries():
     """_all_queries skips _VERIFY_FIRST names that are not entries, so a
-    stale name (a removed gate) would linger unnoticed without this check."""
+    stale name (a removed gate) would linger unnoticed without this check.
+    The list also fits the 50-entry per-round cap with no name twice, so
+    every name in it gets a CORRECTNESS row."""
     stale = [n for n in entry_mod._VERIFY_FIRST if n not in entry_mod.queries()]
     assert not stale, stale
+    assert len(set(entry_mod._VERIFY_FIRST)) == len(entry_mod._VERIFY_FIRST) <= 50

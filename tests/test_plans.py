@@ -318,8 +318,9 @@ def test_session_scale_configs_pinned(spark):
 def test_aqe_splits_skewed_join(spark):
     """On a 90%-hot key, AQE must actually SPLIT the skewed partition in the
     sort-merge join (final adaptive plan marks the join skew=true) — the
-    runtime half of the north-rule's skew story.  Timing evidence lives in
-    bench_skew.py (1.7x at 2M rows); this asserts the mechanism.
+    runtime half of the north-rule's skew story.  Timing evidence is
+    BENCH.md round 3's skew row (1.7x at 2M rows, a local[32] box); this
+    asserts the mechanism.
 
     Also pinned here: when the DOWNSTREAM aggregate is keyed on the join
     key itself, AQE refuses to split (splitting would break the required
@@ -373,13 +374,15 @@ def test_round3_queries_no_rowwise_python(spark):
     Python, never BatchEvalPython."""
     import os
 
+    from mysql_log_parser_spark import entry_queries as EQ
     from mysql_log_parser_spark.entry_queries_ext import EXT_QUERIES
     from mysql_log_parser_spark.entry_queries_textops import TEXTOPS_QUERIES
+    from mysql_log_parser_spark.textops.bpe import bpe_merge_step
 
     sf = "/root/testdata/sf0.001"
     if not os.path.isdir(sf):
         pytest.skip("driver testdata not available")
-    lazy_new = ["bpe_merge_step", "seq_len_histogram", "token_id_topk",
+    lazy_new = ["seq_len_histogram", "token_id_topk",
                 "token_bigram_topk", "slow_window_topk", "line_boilerplate",
                 "word_commonness"]
     reg = dict(TEXTOPS_QUERIES)
@@ -387,6 +390,12 @@ def test_round3_queries_no_rowwise_python(spark):
     for name in lazy_new:
         plan = _plan(reg[name][0](spark, sf))
         assert "BatchEvalPython" not in plan, name
+    # the BPE merge kernel on the corpus, encoded as the BPE gates encode it
+    toks = spark.read.parquet(f"{sf}/documents.parquet").select(
+        "doc_id", EQ.encode_tokens("text").alias("tokens")
+    )
+    plan = _plan(bpe_merge_step(toks, new_id=256))
+    assert "MapInPandas" in plan and "BatchEvalPython" not in plan
     # multimodal_resize: kernel is mapInPandas by design
     plan = _plan(reg["multimodal_resize"][0](spark, sf))
     assert "MapInPandas" in plan and "BatchEvalPython" not in plan

@@ -74,15 +74,19 @@ def test_digest_job_cli(spark, tmp_path):
 
 @pytest.mark.parametrize("mode", ["sketch", "exact"])
 @pytest.mark.parametrize("incremental", [False, True])
-def test_digest_job_event_free_input(spark, tmp_path, mode, incremental):
+def test_digest_job_event_free_input(spark, tmp_path, capsys, mode, incremental):
     """Docs holding only mysqld banner lines parse to no events; the job
     still writes an empty class digest and global_digest's one row of zero
-    counts (its sketch-mode row, in both modes)."""
+    counts (its sketch-mode row, in both modes), and --bench-json reports
+    zero events with every observe_events counter at zero."""
+    import json
+
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from mysql_log_parser_spark.operators.aggregate import global_digest
+    from mysql_log_parser_spark.operators.metrics import observe_events
 
     banner = (
         "/usr/sbin/mysqld, Version: 5.6.15-log (binary). started with:\n"
@@ -107,10 +111,21 @@ def test_digest_job_event_free_input(spark, tmp_path, mode, incremental):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
     import digest_job
 
+    capsys.readouterr()
     digest_job.main(
-        ["--input", str(ind), "--output", out, "--mode", mode]
+        ["--input", str(ind), "--output", out, "--mode", mode, "--bench-json"]
         + (["--incremental"] if incremental else [])
     )
+    leg = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert leg["events"] == 0 and leg["events_per_sec"] == 0
+    probe, counters = observe_events(
+        spark.createDataFrame(
+            [(1.0, "select ?", False)],
+            "query_time double, fingerprint string, admin boolean",
+        )
+    )
+    probe.collect()
+    assert leg["observed"] == dict.fromkeys(counters.get, 0)
     ev = events(spark.read.parquet(str(ind)))
     assert ev.count() == 0
     assert spark.read.parquet(f"{out}/class_digest").count() == 0

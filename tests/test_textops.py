@@ -635,7 +635,7 @@ def test_token_topk_ascii_precondition_and_values(spark):
     assert non_ascii == 0, "oracle precondition broken: corpus is not ASCII"
     # the BPE oracles additionally reserve chr(1)..chr(8) as sentinel chars
     # for merged ids 256..263 — raw control bytes in that range would be
-    # misdecoded as merges that never happened (bpe_train2/bpe_train8)
+    # misdecoded as merges that never happened (bpe_train8/bpe_train_sampled)
     sentinels = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{sf}/documents.parquet') "
         "WHERE regexp_matches(text, '[\\x01-\\x08]')"
@@ -740,8 +740,15 @@ def test_heavy_hitters_plan_is_broadcast_recount(spark):
 def test_bpe_merge_greedy_left_to_right(spark):
     """The merge kernel must resolve overlapping matches exactly like a
     non-overlapping global string replace (what the DuckDB oracle replays):
-    'aaaa' + pair (a,a) -> [X, X], 'aaa' -> [X, a]."""
+    'aaaa' + pair (a,a) -> [X, X], 'aaa' -> [X, a].  top_bigram breaks a
+    count tie by ascending (lead, next), the order the oracle's
+    bg = lead*4096 + next encodes."""
     from mysql_log_parser_spark.textops.bpe import apply_merge, top_bigram
+
+    ties = spark.createDataFrame(
+        [(1, [98, 97]), (2, [97, 98])], "doc_id long, tokens array<int>"
+    )
+    assert top_bigram(ties) == (97, 98, 1)
 
     docs = spark.createDataFrame(
         [
