@@ -24,6 +24,12 @@ this module handles the chunk level above it.
 Manifest: one JSON file per committed chunk under <output>/_manifest/, with
 row counts, per-source routed counts (lineage), and wall-time metrics.
 Commit is atomic via write-temp + rename.
+
+Chunk store: <output>/data/chunk=<name>/ holds each event once.  The
+promoted metric columns (parse.PROMOTED_COLUMNS) are second copies of
+`time_metrics`/`number_metrics` entries, so chunks are written without
+them and `events()` derives them on read.  Chunks committed with them (the
+earlier full-width layout) read back the same.
 """
 
 from __future__ import annotations
@@ -39,6 +45,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
+
+from mysql_log_parser_spark.operators.parse import PROMOTED_COLUMNS, promote_metrics
 
 
 class CheckpointedRunner:
@@ -131,8 +139,9 @@ class CheckpointedRunner:
         ev = process(docs).observe(out_obs, F.count(F.lit(1)).alias("events_out"))
         out_path = os.path.join(self.output_dir, "data", f"chunk={chunk}")
         # idempotent per-chunk write: a re-run of an uncommitted chunk
-        # overwrites its own partial output
-        ev.write.mode("overwrite").parquet(out_path)
+        # overwrites its own partial output; the promoted columns are
+        # copies of map entries, derived again by events()
+        ev.drop(*PROMOTED_COLUMNS).write.mode("overwrite").parquet(out_path)
 
         # per-partition lineage: row counts per routed source AND per
         # written output file, from one grouped read-back of this chunk
@@ -159,11 +168,17 @@ class CheckpointedRunner:
         return rec
 
     def events(self) -> DataFrame:
-        """All committed events (reads only committed chunk dirs)."""
+        """All committed events (reads only committed chunk dirs), with the
+        promoted metric columns derived from the metric maps.
+
+        They are derived for every chunk, not only when the read schema
+        lacks them: without mergeSchema Spark takes the schema from one
+        footer, so a store mixing full-width chunks with map-only ones may
+        read the columns as present yet null for the map-only chunks."""
         done = self.committed_chunks()
         paths = [
             os.path.join(self.output_dir, "data", f"chunk={c}") for c in done
         ]
         if not paths:
             raise ValueError("no committed chunks")
-        return self.spark.read.parquet(*paths)
+        return promote_metrics(self.spark.read.parquet(*paths))

@@ -9,6 +9,10 @@ Every knob here is plain public Spark configuration:
 - shuffle.partitions sized ~2x cores for local mode; on a real cluster set
   spark.sql.shuffle.partitions ~= 2-3x total executor cores (AQE coalesces
   down, it cannot split a too-coarse map side other than via skew handling).
+- Parquet files are written zstd (Apache Iceberg's default since 1.4), so
+  every digest, routed sink and checkpoint chunk shares one codec.
+- The driver heap defaults to half of physical memory, capped at 16g
+  (`default_driver_memory`); SPARK_DRIVER_MEMORY overrides it.
 """
 
 from __future__ import annotations
@@ -32,6 +36,14 @@ TOKEN_SCAN_CONF = {
     "spark.sql.parquet.columnarReaderBatchSize": "256",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
 }
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Half of physical memory (`phys_bytes`, default this host's), capped
+    at 16g, as a Spark size string in MiB."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 << 10, phys_bytes >> 21)}m"
 
 
 def package_zip() -> str:
@@ -79,8 +91,13 @@ def build_session(
         # vectorized parquet reader on wide array columns.  NB: oversized
         # heaps (48g) measurably DESTABILIZE this workload (G1 churns on the
         # humongous token-array vectors; run-to-run swings of 5x) — 8-16g is
-        # the stable band at local[32].
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # the stable band at local[32].  A heap past physical memory is
+        # never safe, hence half of it by default.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # Fat array<int32> token rows: the parquet reader's default 4096-row
         # columnar batches become ~50MB vectors whose reserve/copy cycles
         # dominate the scan, and oversized Arrow batches starve the Python

@@ -1,6 +1,7 @@
 """Kill-and-resume semantics of the chunk-checkpointed runner, plus the
 intra-doc byte-offset resume contract (Options.StartOffset equivalent)."""
 
+import glob
 import os
 import threading
 
@@ -85,6 +86,45 @@ def test_late_arriving_chunk(spark, chunked_input, tmp_path):
     recs = CheckpointedRunner(spark, out).run_incremental(chunked_input, events)
     assert [r["chunk"] for r in recs] == ["chunk9.parquet"]
     assert runner.events().count() == 5 * 6 * 10
+
+
+@pytest.mark.parametrize("old", ["chunk0.parquet", "chunk3.parquet"])
+def test_resume_across_layouts(spark, chunked_input, tmp_path, old):
+    """A store whose first or last chunk in path order was committed
+    full-width (promoted metric columns stored) resumes into map-only
+    chunks, and events() reads back the frame and class digest of a
+    from-scratch run.  Spark takes the schema from one footer, so the
+    promoted columns must be derived for every chunk, whichever it is."""
+    import pyarrow.parquet as pq
+
+    from mysql_log_parser_spark.operators.aggregate import class_digest
+    from mysql_log_parser_spark.operators.parse import PROMOTED_COLUMNS
+
+    out = str(tmp_path / "out")
+    runner = CheckpointedRunner(spark, out)
+    old_dir = os.path.join(out, "data", f"chunk={old}")
+    events(spark.read.parquet(os.path.join(chunked_input, old))).write.parquet(old_dir)
+    runner._commit({"chunk": old, "rows_in": 6, "events_out": 60})
+    recs = runner.run_incremental(chunked_input, events)
+    assert len(recs) == 3 and old not in {r["chunk"] for r in recs}
+
+    for c in (f"chunk{i}.parquet" for i in range(4)):
+        files = glob.glob(os.path.join(out, "data", f"chunk={c}", "*.parquet"))
+        assert files
+        for f in files:
+            stored = set(PROMOTED_COLUMNS) & set(pq.read_schema(f).names)
+            assert stored == (set(PROMOTED_COLUMNS) if c == old else set())
+
+    scratch = events(
+        spark.read.parquet(*(f"{chunked_input}/chunk{i}.parquet" for i in range(4)))
+    )
+    got = runner.events()
+    assert got.columns == scratch.columns
+
+    def digest(ev):
+        return sorted(class_digest(ev, "exact").collect(), key=lambda r: r["class_id"])
+
+    assert digest(got) == digest(scratch)
 
 
 class _ChunkFailure(Exception):

@@ -72,6 +72,59 @@ def test_digest_job_cli(spark, tmp_path):
     assert cd.count() == gd.unique_queries
 
 
+@pytest.mark.parametrize(
+    "flags", [[], ["--incremental"], ["--incremental", "--routed"]],
+    ids=["plain", "incremental", "incremental-routed"],
+)
+def test_digest_job_sink_codec_and_layout(spark, tmp_path, flags):
+    """Every parquet file a digest_job run writes is zstd; checkpoint
+    chunks hold none of the promoted metric columns (events() derives
+    them), and routed files keep all of them for their readers' filters."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from mysql_log_parser_spark.operators.parse import PROMOTED_COLUMNS
+
+    ind = tmp_path / "in"
+    ind.mkdir()
+    for c in range(2):
+        synth.generate_parquet(
+            str(ind / f"c{c}.parquet"), n_docs=4, events_per_doc=10, seed=41 + c
+        )
+    out = str(tmp_path / "out")
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import digest_job
+
+    digest_job.main(["--input", str(ind), "--output", out, *flags])
+    files = [
+        f for f in glob.glob(f"{out}/**/*.parquet", recursive=True)
+        if os.path.isfile(f)  # chunk dirs are named chunk=<file>.parquet
+    ]
+    assert files
+    codecs = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        codecs |= {
+            md.row_group(i).column(j).compression
+            for i in range(md.num_row_groups)
+            for j in range(md.num_columns)
+        }
+    assert codecs == {"ZSTD"}
+
+    promoted = set(PROMOTED_COLUMNS)
+    chunks = [f for f in files if "/data/chunk=" in f]
+    routed = [f for f in files if "/routed/" in f]
+    assert bool(chunks) == ("--incremental" in flags)
+    assert bool(routed) == ("--routed" in flags)
+    for f in chunks:
+        assert not promoted & set(pq.read_schema(f).names)
+    for f in routed:
+        assert promoted <= set(pq.read_schema(f).names)
+    assert spark.read.parquet(f"{out}/global_digest").first().total_queries == 80
+
+
 @pytest.mark.parametrize("mode", ["sketch", "exact"])
 @pytest.mark.parametrize("incremental", [False, True])
 def test_digest_job_event_free_input(spark, tmp_path, capsys, mode, incremental):
